@@ -44,18 +44,15 @@ def minhash_agree(a: Column, b: Column) -> Column:
 
 def minhash_agree_n(a: Column, b: Column, n: int) -> Column:
     """minhash_agree for signatures of STATICALLY-KNOWN length n, unrolled
-    into n element_at comparisons: the HOF zip_with/aggregate fold is
+    into n `get` comparisons: the HOF zip_with/aggregate fold is
     CodegenFallback (one interpreted eval per lane per pair, on every
     candidate pair), while GetArrayItem comparisons compile into
     whole-stage codegen. Value-identical, including NULL semantics: a NULL
     array makes every term NULL, so the sum is NULL exactly like the fold
-    (pinned by tests/test_kernels_r06.py). Callers must guarantee both
-    arrays carry exactly n elements when non-NULL (all call sites are
-    fixed-width signature/band columns)."""
-    terms = [
-        (F.element_at(a, i + 1) == F.element_at(b, i + 1)).cast("int")
-        for i in range(n)
-    ]
+    (pinned by tests/test_kernels_r06.py). `get` is 0-based and NULL past
+    the end even under ANSI mode (element_at throws there), so an array
+    shorter than n yields NULL instead of failing the query."""
+    terms = [(F.get(a, i) == F.get(b, i)).cast("int") for i in range(n)]
     out = terms[0]
     for t in terms[1:]:
         out = out + t

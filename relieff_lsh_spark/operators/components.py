@@ -22,6 +22,14 @@ labels every iteration and was the worst-scaling stage at 4x cores (1.44x);
 this formulation's per-round work is O(|E|), with |E| << n for a dedup
 corpus.
 
+Convergence test: the loop stops as soon as the edge state is a star
+forest — every child has exactly one parent and no parent is a child (one
+grouped aggregate, `_is_star_forest`). Every state edge points from a
+larger to a smaller id and both star rounds preserve connectivity, so a
+star forest is exactly the fixpoint, rooted at component minima: the test
+is exact, costs no extra round to confirm, and an input that is already a
+star forest (e.g. only 2-clip components) converges in 0 rounds.
+
 Lineage/restart discipline: each round the edge state is truncated with
 localCheckpoint; when `checkpoint_dir` is given, every `checkpoint_every`-th
 round ALSO writes the state to parquet (the reference's persisted-graph
@@ -61,7 +69,7 @@ from pyspark.sql import Window as W
 # pairs_per_barrier 1 and 2 are equivalent within host noise (bests
 # 11.9-13.9s vs 14.1-14.3s across two interleaved sessions), 3-4 are
 # clearly WORSE (19.6s/28.8s — deeper lazy composition costs more in plan
-# depth/AQE materialization than the saved checksum actions). The knob
+# depth/AQE materialization than the saved convergence-test actions). The knob
 # exists so the trade stays measurable; the default stays 2 (every
 # recorded scaling/bench artifact ran it, and 1 is not a demonstrated win).
 
@@ -112,26 +120,27 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.where(F.col("u") != F.col("v")).distinct()
 
 
-def _checksum(df: DataFrame) -> int:
-    # Order-insensitive edge-state fingerprint: one hash-agg job per round
-    # instead of a join+count against the previous state. bit_xor cannot
-    # overflow and (u, v) tuples are distinct, so no xor self-cancellation.
-    # A 64-bit collision between consecutive states is ~2^-64/round; the
-    # fixpoint is re-verified with an EXACT set comparison when the
-    # checksum first repeats (below), so a collision costs one extra round,
-    # never a wrong answer.
-    row = df.agg(F.bit_xor(F.xxhash64("u", "v")).alias("c")).collect()[0]
-    return int(row["c"] or 0)
-
-
-def _checksum_and_count(df: DataFrame) -> tuple[int, int]:
-    # Initial-state variant: the emptiness probe and the first checksum are
-    # the SAME aggregate scan, so fold them into one action (one job
-    # materializes the entry checkpoint, vs isEmpty + checksum = two).
-    row = df.agg(
-        F.bit_xor(F.xxhash64("u", "v")).alias("c"), F.count("*").alias("n")
-    ).collect()[0]
-    return int(row["c"] or 0), int(row["n"])
+def _is_star_forest(e: DataFrame) -> bool:
+    """Exact fixpoint test for the star rounds: True iff the edge state
+    e(u, v) (u > v, distinct rows) is a forest of stars — every child u has
+    exactly one parent and no parent is itself a child. Both star rounds map
+    a star forest to itself (each root is the minimum of its closed
+    neighborhood, each child's only neighbor is its root), and both preserve
+    connectivity, so a star forest IS the fixpoint, rooted at each
+    component's minimum id. One grouped aggregate over the edge state
+    answers both conditions per node; the empty state passes."""
+    nodes = e.select(
+        F.col("u").alias("x"), F.lit(1).alias("child"), F.lit(False).alias("parent")
+    ).unionByName(
+        e.select(
+            F.col("v").alias("x"), F.lit(0).alias("child"), F.lit(True).alias("parent")
+        )
+    )
+    per_node = nodes.groupBy("x").agg(
+        F.sum("child").alias("n_parents"), F.bool_or("parent").alias("is_parent")
+    )
+    bad = (F.col("n_parents") > 1) | ((F.col("n_parents") == 1) & F.col("is_parent"))
+    return per_node.where(bad).isEmpty()
 
 
 def _latest_checkpoint(checkpoint_dir: str) -> tuple[int, str] | None:
@@ -159,10 +168,10 @@ def connected_components(
     # bench component) — the restart-protection/extra-write trade-off
     # round 2 effectively ran with
     pairs_per_barrier: int = 2,  # star (large+small) pairs composed lazily
-    # per materialization barrier/checksum action; the fixpoint is
+    # per materialization barrier/convergence test; the fixpoint is
     # latency-bound so fewer barriers = less fixed cost, at the price of up
     # to pairs_per_barrier-1 wasted (cheap, already-converged) rounds after
-    # the true fixpoint and a coarser convergence check
+    # the true fixpoint
 ) -> ComponentsResult:
     """edges(a, b) undirected + vertices(clip_id) -> (clip_id, component_id)
     where component_id = min clip_id in the component. Singletons keep their
@@ -181,58 +190,35 @@ def connected_components(
     if resumed is not None:
         start_round, path = resumed
         e = spark.read.parquet(path)
-    # lazy: the entry _checksum_and_count action below is the materializing
-    # job (its docstring always promised that); eager=True ran a separate
-    # materialization job first — one extra full pass of the edge relation
-    # per call (round-6, plan/job-count check in OPTIMIZATION_r06.md)
+    # lazy: the entry star-forest test below is the materializing job; an
+    # eager checkpoint would run a separate materialization job first — one
+    # extra full pass of the edge relation per call
     e = e.localCheckpoint(eager=False)
 
-    prev_sum, n_edges = _checksum_and_count(e)
-    converged = n_edges == 0
+    # an input that is already a star forest (e.g. every component has two
+    # clips) is the fixpoint: 0 rounds
+    converged = _is_star_forest(e)
     it = start_round
     last_ckpt = start_round  # rounds-since-checkpoint tracker: the loop
     # advances `it` by 2 per pass, so a naive `it % checkpoint_every == 0`
     # with an odd cadence would only fire on multiples of 2*checkpoint_every
-    if converged:
-        prev_sum = None
     while not converged and it < max_iters:
         # pairs_per_barrier star rounds composed lazily per materialization
         # barrier: the stage is latency-bound (per-job scheduling dwarfs the
         # per-round edge shuffle at dedup edge densities), so halving the
-        # number of barriers/checksum actions halves its fixed cost.
-        # Convergence is still exact — the checksum repeat is re-verified
-        # set-wise below.
+        # number of barriers/convergence tests halves its fixed cost.
         it += pairs_per_barrier
         ne = e
         for _ in range(pairs_per_barrier):
             ne = _small_star(_large_star(ne))
-        new_e = ne.localCheckpoint(eager=False)
-        # the checksum action materializes the lazy checkpoint: ONE Spark
-        # job per double-round
-        new_sum = _checksum(new_e)
-        if new_sum == prev_sum:
-            # exact fixpoint verification (checksums are probabilistic):
-            # symmetric difference must be empty. Both states are distinct
-            # (u, v) sets (the round-closing distinct in _small_star), so a
-            # group of count 1 in the concatenation IS an asymmetric row —
-            # ONE job instead of two exceptAll passes.
-            diff = (
-                new_e.unionAll(e)
-                .groupBy("u", "v")
-                .count()
-                .where(F.col("count") == 1)
-                .limit(1)
-                .count()
-            )
-            if diff == 0:
-                converged = True
+        e = ne.localCheckpoint(eager=False)
+        # the exact convergence test materializes the lazy checkpoint
+        converged = _is_star_forest(e)
         if checkpoint_dir and (it - last_ckpt >= checkpoint_every) and not converged:
             path = os.path.join(checkpoint_dir, f"round_{it}")
-            new_e.write.mode("overwrite").parquet(path)
-            new_e = spark.read.parquet(path)
+            e.write.mode("overwrite").parquet(path)
+            e = spark.read.parquet(path)
             last_ckpt = it
-        e = new_e
-        prev_sum = new_sum
 
     # star edges: (child u -> root v); roots and singletons map to themselves
     active_labels = e.select(

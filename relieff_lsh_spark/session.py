@@ -12,7 +12,53 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM", "16g")
+GIB = 1024 ** 3
+# Room the driver heap leaves for each local Python worker (pandas/pyarrow
+# imports plus in-flight Arrow batches) and for the OS, page cache and
+# tmpfs shuffle files.
+PY_WORKER_BYTES = GIB // 2
+OS_RESERVE_BYTES = 2 * GIB
+
+
+def _host_memory_bytes() -> int:
+    """MemTotal, lowered to the cgroup memory limit when one is set."""
+    total = 0
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total = int(line.split()[1]) * 1024
+                    break
+    except OSError:
+        pass
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit() and 0 < int(raw) < total:
+            total = int(raw)
+    return total
+
+
+def default_driver_mem(mem_bytes: int, cpus: int) -> str:
+    """Driver heap sized from the host: half of what is left once every
+    Python worker and the OS reserve have their room, in whole GiB, clamped
+    to 1-16 GiB. The heap is pre-touched at JVM start (GC_JVM_FLAGS), so it
+    is committed memory from the first second and must fit beside them."""
+    free = mem_bytes - cpus * PY_WORKER_BYTES - OS_RESERVE_BYTES
+    return f"{max(1, min(16, int(free // 2 // GIB)))}g"
+
+
+def _driver_mem() -> str:
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    return default_driver_mem(_host_memory_bytes(), cpus)
+
+
 GC_JVM_FLAGS = "-XX:+AlwaysPreTouch -XX:ParallelGCThreads=8 -XX:ConcGCThreads=2"
 # Debugging note (2026-08-17): a JVM SIGSEGV inside
 # ~StubRoutines::jlong_disjoint_arraycopy during Arrow UDF stages turned
@@ -53,6 +99,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
+    driver_mem = _driver_mem()
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
@@ -92,7 +139,7 @@ def get_spark(
         # not affect. Measured: the components fixpoint and AQE-materialized
         # verify stages dropped from ~4s to task-bound walls.
         .config("spark.locality.wait", "0")
-        .config("spark.driver.memory", _DRIVER_MEM)
+        .config("spark.driver.memory", driver_mem)
         # Fixed, pre-touched heap + capped GC threads: with a lazily
         # committed heap, G1's parallel GC threads page-fault constantly
         # (measured: 81% system time at local[32], 2.3x wall-clock).
@@ -100,7 +147,7 @@ def get_spark(
         # the same via --driver-memory/--conf (see BENCH/scaling.py).
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{_DRIVER_MEM} {GC_JVM_FLAGS}",
+            f"-Xms{driver_mem} {GC_JVM_FLAGS}",
         )
         .config("spark.ui.enabled", "false")
         # Let the planner pick shuffled-hash join where its size conditions

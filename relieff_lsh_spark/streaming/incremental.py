@@ -12,21 +12,35 @@ Design (per micro-batch, inside foreachBatch — full batch API available):
   1. sign the new clips (same text/audio/substr/exact channels as batch)
   2. append signatures AND their band rows to state tables — bands are
      computed ONCE per clip when it arrives, so per-batch CPU is O(batch),
-     not O(history)
+     not O(history). The batch's own signatures, bands and verified edges
+     are lazily checkpointed and their state writes are the actions that
+     materialize them — no separate checkpoint or count job. (Reading the
+     written files back instead costs a Spark listing job per read: a
+     batch directory holds more bucket subdirectories than Spark lists
+     serially.) The signatures write also counts the batch (an Observation
+     on the write); an empty batch stops there and leaves no state behind
   3. the bands state is hash-bucketed on band_hash into BUCKETS partition
      directories; each batch statically prunes the state scan to the
      buckets its new keys hash into (file-level pruning — the DataFrame
      filter is on a partition column), then left-semi joins down to the
-     exact touched buckets
+     exact touched buckets. The prune list is read from the `bucket=`
+     directories the batch's own bands write created — no Spark job
   4. candidate pairs within touched buckets, keep only pairs with >= 1 new
      endpoint (old-old pairs were emitted by an earlier batch), exact-verify
      against the signatures state PRUNED to the candidate endpoints' id-hash
-     buckets, append to the verified edge table
+     buckets (one collect), append to the verified edge table
   5. components are maintained INCREMENTALLY (see below): each batch solves
      a mini component problem over just the new edges' endpoint labels and
      appends label-merge edges to a (small) merge log; a components() call
      is a label lookup + the closure of the merge log — never a fixpoint
-     over the full accumulated edge history.
+     over the full accumulated edge history. The vertex-label lookup is
+     pruned with step 4's bucket list: vbucket hashes clip_id exactly like
+     sig_bucket, and every verified endpoint is a candidate endpoint.
+
+State layout: every write lands in `<table>/batch_id=N/`; partitioned
+tables are clustered by their partition column before the write, so a
+batch leaves ONE parquet file per touched `bucket=` / `sig_bucket=` /
+`vbucket=` directory (not one per writing task per bucket).
 
 Incremental components state (round-3; replaces the round-2 full
 refixpoint-over-all-edges):
@@ -103,16 +117,13 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from relieff_lsh_spark.config import DedupConfig
 from relieff_lsh_spark.functions.signatures import clip_signatures
-from relieff_lsh_spark.operators.banding import (
-    audio_bands,
-    substr_bands,
-    text_bands,
-)
+from relieff_lsh_spark.operators.banding import all_bands
 from relieff_lsh_spark.operators.candidates import band_candidates
 from relieff_lsh_spark.operators.components import ComponentsResult, connected_components
 from relieff_lsh_spark.operators.verify import verify_candidates
@@ -174,27 +185,35 @@ class IncrementalDedup:
         with open(p) as f:
             return json.load(f)
 
-    def _read_or_none(self, path: str) -> DataFrame | None:
+    def _read_or_none(
+        self, path: str, schema: StructType | None = None
+    ) -> DataFrame | None:
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         try:
-            return self.spark.read.parquet(path)
+            return reader.parquet(path)
         except Exception:
             return None
 
-    def _state(self, table: str, before_batch: int | None = None) -> DataFrame | None:
+    def _state(
+        self, table: str, before_batch: int | None = None,
+        schema: StructType | None = None,
+    ) -> DataFrame | None:
         """Current view of a state table: compacted snapshot (if any) union
         live batches above the compaction watermark. `before_batch` further
         restricts LIVE batches to batch_id < before_batch — the replay
         guard for in-batch reads (compacted rows are always below the
-        watermark, hence below any live batch id)."""
+        watermark, hence below any live batch id). `schema` — the table's
+        columns as this batch wrote them — spares each read its
+        schema-inference job."""
         parts = []
         ptr = self._pointer(table)
         if ptr is not None:
             cdf = self._read_or_none(
-                os.path.join(self._compact_root(table), f"v{ptr['version']}")
+                os.path.join(self._compact_root(table), f"v{ptr['version']}"), schema
             )
             if cdf is not None:
                 parts.append(cdf)
-        live = self._read_or_none(self._live_root(table))
+        live = self._read_or_none(self._live_root(table), schema)
         if live is not None:
             if ptr is not None:
                 live = live.where(F.col("batch_id") > ptr["covered_through"])
@@ -208,15 +227,37 @@ class IncrementalDedup:
             out = out.unionByName(p)
         return out
 
-    def _write_batch(self, table: str, df: DataFrame, batch_id: int) -> None:
+    def _batch_dir(self, table: str, batch_id: int) -> str:
+        return os.path.join(self._live_root(table), f"batch_id={int(batch_id)}")
+
+    def _write_batch(self, table: str, df: DataFrame, batch_id: int) -> int:
         """Idempotent state write: per-batch subdirectory, overwrite mode —
-        an at-least-once replay of this batch rewrites, never duplicates."""
-        w = df.write.mode("overwrite")
+        an at-least-once replay of this batch rewrites, never duplicates.
+        Partitioned tables are clustered by their partition column first,
+        so each bucket directory gets ONE file per batch (without it every
+        task writes into every bucket it holds rows for: hundreds of tiny
+        files per batch that every later state scan lists and opens).
+        Returns the rows written, observed on the write itself."""
         part = STATE_TABLES[table]
         if part is not None:
+            # explicit count: AQE may not coalesce it, so a small batch's
+            # buckets are still written by parallel tasks, never by one
+            df = df.repartition(self.cfg.shuffle_partitions, part)
+        rows = Observation()
+        w = df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+        if part is not None:
             w = w.partitionBy(part)
-        w.parquet(
-            os.path.join(self._live_root(table), f"batch_id={int(batch_id)}")
+        w.parquet(self._batch_dir(table, batch_id))
+        return int(rows.get["n"])
+
+    def _batch_partitions(self, table: str, batch_id: int) -> list[int]:
+        """Partition values this batch's write materialized, listed from its
+        own `<col>=<value>` directories — no Spark job. The write is in
+        overwrite mode, so a replayed batch lists exactly its own values."""
+        prefix = f"{STATE_TABLES[table]}="
+        d = self._batch_dir(table, batch_id)
+        return sorted(
+            int(name[len(prefix):]) for name in os.listdir(d) if name.startswith(prefix)
         )
 
     # -- public state accessors --------------------------------------------
@@ -278,56 +319,34 @@ class IncrementalDedup:
         return connected_components(self.verified_edges(), vertices)
 
     # -- per-batch work ----------------------------------------------------
-    def _batch_bands(self, batch: DataFrame, new_sigs: DataFrame) -> DataFrame:
-        """All four channels' band rows for the NEW clips only."""
-        exact = batch.select(
-            "clip_id",
-            F.lit("exact").alias("channel"),
-            F.lit(0).alias("band_id"),
-            F.xxhash64("bytes").alias("band_hash"),
-        )
-        return (
-            text_bands(new_sigs, self.cfg)
-            .unionByName(substr_bands(new_sigs))
-            .unionByName(audio_bands(new_sigs, self.cfg))
-            .unionByName(exact)
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("band_hash"), F.lit(BUCKETS))
-            )
-        )
-
     def _update_components(
-        self, batch_id: int, new_ids: DataFrame, new_edges: DataFrame
+        self, batch_id: int, new_ids: DataFrame, new_edges: DataFrame,
+        vbuckets: list[int],
     ) -> dict:
         """Incremental component maintenance for one batch (docstring at the
-        top of this module). Reads only comp_vertices partitions the new
-        edges' endpoints hash into, with batch_id < this batch (replay
-        guard); work is O(batch edges + touched buckets)."""
+        top of this module). Reads only the comp_vertices partitions in
+        `vbuckets` (a superset of the new edges' endpoint buckets), with
+        batch_id < this batch (replay guard); work is O(batch edges +
+        touched buckets)."""
         eps = (
             new_edges.select(F.col("a").alias("clip_id"))
             .union(new_edges.select(F.col("b").alias("clip_id")))
             .distinct()
-            .localCheckpoint()
         )
         stats = {"comp_buckets_pruned_to": 0, "merge_edges_appended": 0}
         prior = self._state("comp_vertices", before_batch=batch_id)
         if prior is not None:
-            vb = [
-                int(r[0])
-                for r in eps.select(
-                    F.pmod(F.xxhash64("clip_id"), F.lit(BUCKETS)).alias("vb")
-                ).distinct().collect()
-            ]
-            stats["comp_buckets_pruned_to"] = len(vb)
-            pruned = prior.where(F.col("vbucket").isin(vb)).select("clip_id", "label")
+            stats["comp_buckets_pruned_to"] = len(vbuckets)
+            pruned = prior.where(F.col("vbucket").isin(vbuckets)).select("clip_id", "label")
             labels = eps.join(pruned, "clip_id", "left")
         else:
             labels = eps.withColumn("label", F.lit(None).cast("string"))
+        # lazy: the components call below is the first action over it
         labels = labels.select(
             "clip_id",
             F.col("label").isNotNull().alias("is_old"),
             F.coalesce("label", "clip_id").alias("label"),
-        ).localCheckpoint()
+        ).localCheckpoint(eager=False)
 
         # mini component problem on the LABEL graph of this batch's edges
         lab_a = labels.select(F.col("clip_id").alias("a"), F.col("label").alias("la"))
@@ -340,9 +359,10 @@ class IncrementalDedup:
         )
         nodes = labels.select(F.col("label").alias("clip_id")).distinct()
         res = connected_components(edges_lab, nodes)
+        # lazy: materialized by the comp_vertices write, reused by merges
         mapping = res.components.select(
             F.col("clip_id").alias("node_label"), F.col("component_id").alias("root")
-        ).localCheckpoint()
+        ).localCheckpoint(eager=False)
 
         # new vertices: store their resolved root (own id if untouched)
         new_rows = (
@@ -364,37 +384,37 @@ class IncrementalDedup:
             .where(F.col("node_label") != F.col("root"))
             .select(F.col("node_label").alias("u"), F.col("root").alias("v"))
             .distinct()
-            .localCheckpoint()
         )
-        stats["merge_edges_appended"] = merges.count()
-        self._write_batch("comp_merges", merges, batch_id)
+        stats["merge_edges_appended"] = self._write_batch("comp_merges", merges, batch_id)
         return stats
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        batch = batch.localCheckpoint()
-        n_new = batch.count()
+        """One micro-batch. The batch's signatures, bands and verified edges
+        sit behind LAZY checkpoints that their state writes materialize, so
+        later steps reuse them at no extra job, and the bands prune list is
+        the batch's own `bucket=` directories (no collect)."""
+        new_sigs = clip_signatures(batch, self.cfg).withColumn(
+            "sig_bucket", F.pmod(F.xxhash64("clip_id"), F.lit(BUCKETS))
+        ).localCheckpoint(eager=False)
+        n_new = self._write_batch("signatures", new_sigs, batch_id)
         if n_new == 0:
+            # an empty batch leaves no state behind
+            shutil.rmtree(self._batch_dir("signatures", batch_id), ignore_errors=True)
             return
-        new_sigs = clip_signatures(batch, self.cfg).localCheckpoint()
-        self._write_batch(
-            "signatures",
-            new_sigs.withColumn(
-                "sig_bucket", F.pmod(F.xxhash64("clip_id"), F.lit(BUCKETS))
-            ),
-            batch_id,
-        )
-        new_bands = self._batch_bands(batch, new_sigs).localCheckpoint()
+        new_bands = all_bands(batch, new_sigs, new_sigs, self.cfg).withColumn(
+            "bucket", F.pmod(F.xxhash64("band_hash"), F.lit(BUCKETS))
+        ).localCheckpoint(eager=False)
         self._write_batch("bands", new_bands, batch_id)
 
         # Buckets the new keys hash into: a static filter on the state
         # table's partition column -> file-level pruning of the scan.
-        new_keys = new_bands.select("channel", "band_id", "band_hash", "bucket").distinct()
-        hit_buckets = [int(r["bucket"]) for r in new_keys.select("bucket").distinct().collect()]
-        pruned = self.bands_state().where(F.col("bucket").isin(hit_buckets))
+        hit_buckets = self._batch_partitions("bands", batch_id)
+        new_keys = new_bands.select("channel", "band_id", "band_hash").distinct()
+        pruned = self._state("bands", schema=new_bands.schema).where(
+            F.col("bucket").isin(hit_buckets)
+        )
         touched = pruned.join(
-            F.broadcast(new_keys.select("channel", "band_id", "band_hash")),
-            ["channel", "band_id", "band_hash"],
-            "left_semi",
+            F.broadcast(new_keys), ["channel", "band_id", "band_hash"], "left_semi"
         ).select("clip_id", "channel", "band_id", "band_hash")
 
         # the O(batch)-bound counter comes free from band_candidates' stats
@@ -403,7 +423,7 @@ class IncrementalDedup:
         cand, stats = band_candidates(touched, self.cfg)
         rows_scanned = stats.rows_in
         # old-old pairs inside touched buckets were found by earlier batches
-        new_ids = batch.select("clip_id")
+        new_ids = new_sigs.select("clip_id")
         is_new = F.broadcast(new_ids.withColumn("is_new", F.lit(True)))
         cand = (
             cand.join(is_new.withColumnRenamed("clip_id", "a"), "a", "left")
@@ -415,8 +435,9 @@ class IncrementalDedup:
         )
         # prune the signature-state scan to the candidate endpoints' id-hash
         # buckets (partition-column filter -> file-level pruning, symmetric
-        # with the bands-state prune above)
-        cand = cand.localCheckpoint()
+        # with the bands-state prune above). Lazy checkpoint: the collect
+        # right below is its first action.
+        cand = cand.localCheckpoint(eager=False)
         endpoints = cand.select(F.col("a").alias("clip_id")).union(
             cand.select(F.col("b").alias("clip_id"))
         )
@@ -426,17 +447,21 @@ class IncrementalDedup:
                 F.pmod(F.xxhash64("clip_id"), F.lit(BUCKETS)).alias("sb")
             ).distinct().collect()
         ]
-        sigs_pruned = self.signatures().where(
+        sigs_pruned = self._state("signatures", schema=new_sigs.schema).where(
             F.col("sig_bucket").isin(sig_buckets)
         )
-        verified = verify_candidates(cand, sigs_pruned, self.cfg).localCheckpoint()
+        verified = verify_candidates(cand, sigs_pruned, self.cfg).localCheckpoint(
+            eager=False
+        )
         self._write_batch("verified", verified, batch_id)
+        # vbucket and sig_bucket hash clip_id identically, and every
+        # verified endpoint is a candidate endpoint: sig_buckets covers them
         comp_stats = self._update_components(
-            batch_id, new_ids, verified.select("a", "b")
+            batch_id, new_ids, verified.select("a", "b"), sig_buckets
         )
         self.batch_stats.append({
             "batch_id": int(batch_id),
-            "new_clips": int(n_new),
+            "new_clips": n_new,
             "bands_rows_joined": int(rows_scanned),
             "buckets_pruned_to": len(hit_buckets),
             "sig_buckets_pruned_to": len(sig_buckets),

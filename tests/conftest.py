@@ -9,17 +9,20 @@ from relieff_lsh_spark.session import get_spark
 from relieff_lsh_spark.sources.corpus import write_corpus
 
 CACHE_DIR = os.path.join(os.path.dirname(__file__), "_data")
+# local cores and shuffle partitions: SPARK_GRAFT_CPUS, else this host's CPUs
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="relieff-lsh-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="relieff-lsh-tests", master=f"local[{CPUS}]",
+                  shuffle_partitions=CPUS)
     yield s
 
 
 @pytest.fixture(scope="session")
 def cfg() -> DedupConfig:
-    return DedupConfig(shuffle_partitions=8)
+    return DedupConfig(shuffle_partitions=CPUS)
 
 
 def _corpus_dir(n: int, seed: int, pcm_ref: bool) -> str:

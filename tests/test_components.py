@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from relieff_lsh_spark.operators.components import connected_components, pair_recall
 from relieff_lsh_spark.plans.oracle import UnionFind
 
@@ -23,17 +25,44 @@ def test_chain_and_singletons(spark):
     assert got["v4"] == "v4" and got["v7"] == "v7"
 
 
-def test_matches_union_find_random(spark):
+def _random_edges(vertices):
     import numpy as np
 
     rng = np.random.default_rng(3)
-    vertices = [f"n{i:03d}" for i in range(120)]
     edges = []
     for _ in range(100):
-        i, j = rng.integers(0, 120, 2)
+        i, j = rng.integers(0, len(vertices), 2)
         if i != j:
-            a, b = sorted((vertices[i], vertices[j]))
-            edges.append((a, b))
+            edges.append(tuple(sorted((vertices[i], vertices[j]))))
+    return edges
+
+
+def _long_path(vertices):
+    # shuffled ids along the path, so it is not ordered by id
+    order = sorted(vertices, key=lambda x: (int(x[1:]) * 37) % len(vertices))
+    return list(zip(order, order[1:]))
+
+
+def _cycles(vertices):
+    # three cycles of 40 vertices each
+    return [
+        (vertices[c + i], vertices[c + (i + 1) % 40])
+        for c in range(0, 120, 40) for i in range(40)
+    ]
+
+
+def _duplicate_and_reversed(vertices):
+    # every edge of a random graph three times: as is, reversed, repeated
+    base = _random_edges(vertices)
+    return base + [(b, a) for a, b in base] + base[::2]
+
+
+@pytest.mark.parametrize(
+    "make_edges", [_random_edges, _long_path, _cycles, _duplicate_and_reversed]
+)
+def test_matches_union_find(spark, make_edges):
+    vertices = [f"n{i:03d}" for i in range(120)]
+    edges = make_edges(vertices)
     got, res = _run(spark, edges, vertices)
     uf = UnionFind(vertices)
     for a, b in edges:
@@ -41,6 +70,29 @@ def test_matches_union_find_random(spark):
     want = {v: uf.find(v) for v in vertices}
     assert got == want
     assert res.converged
+
+
+def test_star_forest_input_converges_in_zero_rounds(spark):
+    """A star forest is the fixpoint: 2-clip components, and stars whose
+    root is the minimum id, converge without a single star round."""
+    vertices = [f"s{i:02d}" for i in range(12)]
+    edges = [("s00", "s01"), ("s03", "s02"),            # 2-clip components
+             ("s04", "s05"), ("s04", "s06"), ("s07", "s04")]  # star at s04
+    got, res = _run(spark, edges, vertices)
+    assert res.converged and res.iterations == 0
+    assert got["s01"] == "s00" and got["s03"] == "s02"
+    assert all(got[v] == "s04" for v in ("s04", "s05", "s06", "s07"))
+    assert all(got[v] == v for v in ("s08", "s09", "s10", "s11"))
+
+
+def test_star_forest_test_is_exact(spark):
+    """Not a star forest: a child with two parents, or a parent that is a
+    child (a 3-path). Both need star rounds and end at the minimum."""
+    vertices = ["a", "b", "c", "d"]
+    for edges in ([("a", "c"), ("b", "c")], [("a", "b"), ("b", "c")]):
+        got, res = _run(spark, edges, vertices)
+        assert res.converged and res.iterations > 0
+        assert got == {"a": "a", "b": "a", "c": "a", "d": "d"}
 
 
 def test_pair_recall_contingency(spark):

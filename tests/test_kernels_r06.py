@@ -143,6 +143,32 @@ def test_minhash_agree_n_matches_hof(spark):
 
 
 @pytest.mark.usefixtures("spark")
+def test_minhash_agree_n_short_or_null_array_under_ansi(spark):
+    """Under ANSI mode an array shorter than n, or a NULL array, yields
+    NULL (as the HOF fold does) instead of failing the query."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        ([1, 2, 3, 4], [1, 9, 3, 7]),   # 2 agree
+        ([1, 2], [1, 2, 3, 4]),         # short side -> NULL
+        (None, [1, 2, 3, 4]),           # NULL side -> NULL
+    ]
+    df = spark.createDataFrame(rows, "a: array<bigint>, b: array<bigint>")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = [
+            r[0]
+            for r in df.select(
+                dist.minhash_agree_n(F.col("a"), F.col("b"), 4)
+            ).collect()
+        ]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == [2, None, None]
+
+
+@pytest.mark.usefixtures("spark")
 def test_simhash_df_kernel_matches_jvm_fold(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     jvm = sorted(map(tuple, dd.simhash_df(docs, kernel=False).collect()))

@@ -141,6 +141,38 @@ def test_replayed_batch_is_idempotent(spark, cfg: DedupConfig, tiny_corpus_dir,
     assert inc.verified_edges().count() == edges1
 
 
+def test_batch_writes_one_file_per_bucket(spark, cfg: DedupConfig,
+                                         tiny_corpus_dir, tmp_path):
+    """A micro-batch leaves at most one parquet file per bucket directory
+    of each partitioned state table, however many partitions its input
+    has, and the bands prune list is exactly its own bucket directories."""
+    corpus = spark.read.parquet(os.path.join(tiny_corpus_dir, "corpus.parquet"))
+    state = str(tmp_path / "state")
+    inc = IncrementalDedup(spark, cfg, state, auto_compact_every=None)
+    inc.process_batch(corpus.limit(80).repartition(3), batch_id=0)
+    for table, col in (("bands", "bucket"), ("signatures", "sig_bucket"),
+                       ("comp_vertices", "vbucket")):
+        d = os.path.join(state, table, "batch_id=0")
+        buckets = [b for b in os.listdir(d) if b.startswith(f"{col}=")]
+        assert buckets, table
+        for b in buckets:
+            files = [f for f in os.listdir(os.path.join(d, b)) if f.endswith(".parquet")]
+            assert len(files) <= 1, (table, b, files)
+        if table == "bands":
+            assert inc.batch_stats[-1]["buckets_pruned_to"] == len(buckets)
+
+
+def test_empty_batch_leaves_no_state(spark, cfg: DedupConfig, tiny_corpus_dir,
+                                     tmp_path):
+    corpus = spark.read.parquet(os.path.join(tiny_corpus_dir, "corpus.parquet"))
+    state = str(tmp_path / "state")
+    inc = IncrementalDedup(spark, cfg, state, auto_compact_every=None)
+    inc.process_batch(corpus.limit(0), batch_id=0)
+    assert inc.batch_stats == []
+    assert inc.signatures() is None
+    assert not os.path.exists(os.path.join(state, "signatures", "batch_id=0"))
+
+
 def test_incremental_components_equal_global_fixpoint(spark, cfg: DedupConfig,
                                                       tiny_corpus_dir, tmp_path):
     """The incrementally-maintained components (stored labels + merge-log
