@@ -1,11 +1,12 @@
 """Audio-channel signature functions.
 
 Design (SURVEY.md §2.9, §7.1 M2): decode -> spectral fingerprint -> SimHash64
-are FUSED into one Arrow-batched mapInPandas stage so raw PCM never crosses a
-shuffle boundary and the wide `bytes` column is dropped at the source
-(SURVEY.md §4 O10: never shuffle bytes). Everything inside is numpy-batch
-work — no per-row Python beyond the unavoidable per-clip FFT loop, which is
-itself vectorized over frames.
+are FUSED into one scalar Arrow UDF (make_simhash_udf), projected inside the
+corpus scan by functions/signatures.clip_signatures, so raw PCM never
+crosses a shuffle boundary and the wide `bytes` column is dropped at the
+source (SURVEY.md §4 O10: never shuffle bytes). Everything inside is
+numpy work — no per-row Python beyond the unavoidable per-clip FFT loop,
+which is itself vectorized over frames.
 
 The SimHash-64 here plays the role of the reference's LSH point signature
 (EuclideanLSHasher import, reference ReliefFFeatureSelector.scala:19; params
@@ -16,22 +17,12 @@ packed to 64 bits, compared later with xor+bit_count (JVM-side).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from relieff_lsh_spark.config import DedupConfig
-
-SIGNATURE_SCHEMA = T.StructType([
-    T.StructField("clip_id", T.StringType()),
-    T.StructField("simhash", T.LongType()),
-    T.StructField("n_samples", T.IntegerType()),
-    T.StructField("rms", T.FloatType()),
-])
 
 
 def _wav_header(buf: bytes) -> tuple[int, int]:
@@ -77,8 +68,8 @@ def _decode_wav_pcm_f32le(buf: bytes) -> tuple[np.ndarray, int]:
 # UNCOMPRESSED WAV codec decodes natively (numpy only — no external libs);
 # compressed codecs (opus/mp3/flac/...) need external libraries
 # (ffmpeg/soundfile) not present in this container; registering a decoder
-# here — or passing an override dict through audio_signatures/
-# clip_signatures/DedupPipeline — is the full integration surface (the
+# here — or passing an override dict through clip_signatures/
+# DedupPipeline — is the full integration surface (the
 # dispatch, quarantine-exit, and signature paths are covered with an
 # injected mock decoder in tests/test_audio_channel.py).
 DECODERS: dict = {
@@ -93,8 +84,8 @@ def decode_pcm(
     buf: bytes, codec: str, decoders: dict | None = None
 ) -> tuple[np.ndarray, int]:
     """Decode one clip to float32 [-1,1] + sample rate via the codec
-    registry; unknown codecs raise NotImplementedError (callers on the task
-    path catch it and QUARANTINE the clip, functions below)."""
+    registry; unknown codecs raise NotImplementedError (make_simhash_udf
+    catches it and QUARANTINES the clip)."""
     dec = (decoders or DECODERS).get(codec)
     if dec is None:
         raise NotImplementedError(
@@ -103,25 +94,6 @@ def decode_pcm(
             "environment)"
         )
     return dec(buf)
-
-
-def try_simhash(
-    buf,
-    codec: str,
-    cfg: DedupConfig,
-    planes: np.ndarray,
-    decoders: dict | None = None,
-) -> int | None:
-    """Fused decode -> fingerprint -> SimHash for one clip; None when the
-    codec has no decoder (QUARANTINE, not a task-killing raise — a real
-    corpus always carries codecs this container can't decode; the clip still
-    participates in the exact/text/substr channels and is counted per-codec
-    in the signatures-stage manifest)."""
-    try:
-        x, sr = decode_pcm(bytes(buf), codec, decoders)
-    except NotImplementedError:
-        return None
-    return simhash64(spectral_fingerprint(x, sr, cfg), planes)
 
 
 # (n_fft, sr_hz, n_freq_bands, fmax_hz) -> (hann window, band lo indices,
@@ -234,43 +206,6 @@ def simhash64(fp: np.ndarray, planes: np.ndarray) -> int:
     bits = (planes @ fp) > 0
     val = np.bitwise_or.reduce(_BIT_WEIGHTS[: bits.size][bits], initial=np.uint64(0))
     return int(val.astype(np.int64))
-
-
-def audio_signatures(
-    corpus: DataFrame, cfg: DedupConfig, decoders: dict | None = None
-) -> DataFrame:
-    """corpus -> (clip_id, simhash, n_samples, rms) via one fused
-    mapInPandas pass. Drops `bytes` before any shuffle. `decoders` overrides
-    the codec registry (closed over, so it ships to python workers with the
-    UDF — module-level monkeypatching would not)."""
-    planes = simhash_planes(cfg)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, counts, rmss = [], [], [], []
-            for buf, codec, cid in zip(pdf["bytes"], pdf["codec"], pdf["clip_id"]):
-                try:
-                    x, sr = decode_pcm(bytes(buf), codec, decoders)
-                except NotImplementedError:
-                    # quarantine: no decoder for this codec in-container
-                    ids.append(cid); hashes.append(None)
-                    counts.append(0); rmss.append(0.0)
-                    continue
-                fp = spectral_fingerprint(x, sr, cfg)
-                hashes.append(simhash64(fp, planes))
-                ids.append(cid)
-                counts.append(len(x))
-                rmss.append(float(np.sqrt(np.mean(x**2))) if len(x) else 0.0)
-            yield pd.DataFrame({
-                "clip_id": ids,
-                "simhash": pd.Series(hashes, dtype="Int64"),
-                "n_samples": pd.Series(counts, dtype="int32"),
-                "rms": pd.Series(rmss, dtype="float32"),
-            })
-
-    return corpus.select("clip_id", "bytes", "codec").mapInPandas(
-        compute, schema=SIGNATURE_SCHEMA
-    )
 
 
 def make_simhash_udf(cfg: DedupConfig, decoders: dict | None = None):

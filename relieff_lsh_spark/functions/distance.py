@@ -31,27 +31,16 @@ def jaccard_sets(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
 
 
-def minhash_agree(a: Column, b: Column) -> Column:
-    """Number of agreeing MinHash lanes between two equal-length
-    array<bigint> signatures (the MinHash Jaccard estimate is this divided
-    by the signature length). JVM-side fold; NULL if either side is NULL."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-
-
 def minhash_agree_n(a: Column, b: Column, n: int) -> Column:
-    """minhash_agree for signatures of STATICALLY-KNOWN length n, unrolled
-    into n `get` comparisons: the HOF zip_with/aggregate fold is
+    """Number of agreeing lanes between two MinHash signatures of
+    STATICALLY-KNOWN length n (the MinHash Jaccard estimate is this divided
+    by n), unrolled into n `get` comparisons: GetArrayItem comparisons
+    compile into whole-stage codegen, where a zip_with/aggregate fold is
     CodegenFallback (one interpreted eval per lane per pair, on every
-    candidate pair), while GetArrayItem comparisons compile into
-    whole-stage codegen. Value-identical, including NULL semantics: a NULL
-    array makes every term NULL, so the sum is NULL exactly like the fold
-    (pinned by tests/test_kernels_r06.py). `get` is 0-based and NULL past
-    the end even under ANSI mode (element_at throws there), so an array
-    shorter than n yields NULL instead of failing the query."""
+    candidate pair). A NULL array makes every term NULL, so the sum is
+    NULL. `get` is 0-based and NULL past the end even under ANSI mode
+    (element_at throws there), so an array shorter than n yields NULL
+    instead of failing the query (pinned by tests/test_kernels_r06.py)."""
     terms = [(F.get(a, i) == F.get(b, i)).cast("int") for i in range(n)]
     out = terms[0]
     for t in terms[1:]:
@@ -68,16 +57,6 @@ def contains_verbatim(needle: Column, haystack: Column) -> Column:
 
 def substr_either(t_a: Column, t_b: Column) -> Column:
     return contains_verbatim(t_a, t_b) | contains_verbatim(t_b, t_a)
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity between two array<float> embeddings, via
-    aggregate/zip_with (JVM-side; no UDF)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
 def cosine_seqfold(a: Column, b: Column) -> Column:
@@ -142,8 +121,7 @@ def intersect_count_u64pairs(a1: Column, a2: Column,
     primitive element types; struct elements fall back to O(n*m)
     ordering-based comparison, which made the exact-Jaccard tail the most
     expensive stage of the document verify query (measured 4-7x tail
-    speedup at sf1x, BENCH/jv_profile.py; the whole-query A/B is in
-    BENCH/cos_kernel_probe.json's sibling artifacts).
+    speedup at sf1x, round 5).
 
     Exactness: both h1 and h2 are < 2^32 (Horner chains mod ~2^32 primes),
     so each pair packs LOSSLESSLY into one uint64 key (h1 << 32 | h2); the
@@ -151,12 +129,11 @@ def intersect_count_u64pairs(a1: Column, a2: Column,
     oracle needs no change. Key-distinctness holds because the shingle
     arrays are array_distinct upstream (pair-distinct => packed-key-distinct).
 
-    Round-6: the kernel is FLATTENED — one vectorized pass per Arrow batch
-    (concatenate + per-batch dense key ids + one intersect1d + bincount)
-    instead of a per-row python loop of np.intersect1d calls (the round-5
-    VERDICT's named fix). Counts are identical by construction: a (row, key)
-    match under the dense-id encoding is exactly a per-row packed-key match.
-    Measured A/B: BENCH/intersect_flat_probe.json (see OPTIMIZATION_r06.md).
+    One vectorized pass per Arrow batch (concatenate + per-batch dense key
+    ids + one intersect1d + bincount) instead of a per-row np.intersect1d
+    loop: a (row, key) match under the dense-id encoding is exactly a
+    per-row packed-key match (checked against a set intersection in
+    tests/test_kernels_r06.py; A/B in OPTIMIZATION_r06.md).
     """
     return _nint_flat_kernel(a1, a2, b1, b2)
 
@@ -197,18 +174,3 @@ def _nint_flat_kernel(s_a1: pd.Series, s_a2: pd.Series,
     # arrays are array_distinct upstream, rows disjoint in the encoding
     counts = np.bincount(hits // m, minlength=n).astype(np.int32)
     return pd.Series(counts)
-
-
-@F.pandas_udf(T.IntegerType())
-def _nint_perrow_kernel(s_a1: pd.Series, s_a2: pd.Series,
-                        s_b1: pd.Series, s_b2: pd.Series) -> pd.Series:
-    """Round-5 per-row form (kept for the A/B probe; positional .to_numpy
-    access per round-6 ADVICE)."""
-    a1, a2 = s_a1.to_numpy(), s_a2.to_numpy()
-    b1, b2 = s_b1.to_numpy(), s_b2.to_numpy()
-    out = np.empty(len(a1), dtype=np.int32)
-    for i in range(len(a1)):
-        ka = (a1[i].astype(np.uint64) << _U32) | a2[i].astype(np.uint64)
-        kb = (b1[i].astype(np.uint64) << _U32) | b2[i].astype(np.uint64)
-        out[i] = np.intersect1d(ka, kb, assume_unique=True).size
-    return pd.Series(out)

@@ -14,9 +14,8 @@ and the banding is an explicit, inspectable column expression.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,27 +56,17 @@ def shingle_hashes_from_tokens(th: Column, k: int) -> Column:
     return F.when(n >= k, sh).otherwise(F.array().cast("array<bigint>"))
 
 
-def shingle_hashes_expr(tokens: Column, k: int, distinct: bool = True) -> Column:
-    """array<bigint> of xxhash64 over word k-shingles. Positional order kept
-    when distinct=False (needed by winnowing). Short/empty texts -> [].
-
-    JVM-side: sequence + transform + slice + concat_ws + xxhash64.
-    """
-    n = F.size(tokens)
-    shingled = F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(tokens, i + 1, k))),
-    )
-    out = F.when(n >= k, shingled).otherwise(F.array().cast("array<bigint>"))
-    return F.array_distinct(out) if distinct else out
-
-
 def minimizer_keys_from(hashes: Column, w: int) -> Column:
-    """Winnowing minimizers over an ALREADY-MATERIALIZED positional hash
-    column. `hashes` MUST be a plain column reference (not an inline
-    expression): inside a single expression tree Spark re-evaluates the
-    producer per window element — O(n^2) hashing per row, measured as 116s
-    of a 165s signature stage before staging the projection."""
+    """Winnowing minimizer keys (document fingerprinting): the min hash of
+    every w-wide window over a positional k-shingle hash sequence. Any
+    shared verbatim span of >= k+w-1 words shares at least one key — the
+    substring-duplicate candidate channel (SURVEY.md §2.9 suffix_substr_keys;
+    winnowing per Schleimer et al. 2003).
+
+    `hashes` MUST be an already-materialized plain column reference (not an
+    inline expression): inside a single expression tree Spark re-evaluates
+    the producer per window element — O(n^2) hashing per row, measured as
+    116s of a 165s signature stage before staging the projection."""
     n = F.size(hashes)
     wins = F.transform(
         F.sequence(F.lit(0), n - w),
@@ -91,20 +80,6 @@ def minimizer_keys_from(hashes: Column, w: int) -> Column:
             )
         )
     )
-
-
-def minimizer_keys_expr(tokens: Column, k: int, w: int) -> Column:
-    """Winnowing minimizer keys (document fingerprinting): the min shingle
-    hash of every w-wide window over the positional k-shingle sequence.
-    Any shared verbatim span of >= k+w-1 words shares at least one key —
-    this is the substring-duplicate candidate channel (SURVEY.md §2.9
-    suffix_substr_keys; winnowing per Schleimer et al. 2003, public).
-
-    NOTE: inline form, quadratic per row (see minimizer_keys_from) — kept
-    for small-data tests; production paths stage the positional hashes as a
-    projection column first.
-    """
-    return minimizer_keys_from(shingle_hashes_expr(tokens, k, distinct=False), w)
 
 
 def minhash_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
@@ -209,33 +184,4 @@ def band_hashes_expr(sig: Column, cfg: DedupConfig) -> Column:
                                          lambda v: v.cast("string"))),
             bnd,
         ),
-    )
-
-
-def text_signatures(corpus: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """corpus -> (clip_id, shingles, minhash, text_bands, substr_keys,
-    n_shingles). Narrow (no shuffle); the `bytes` column never enters.
-    Positional hash arrays are staged as projection columns so downstream
-    window/distinct expressions reference them instead of re-evaluating the
-    hashing (see minimizer_keys_from)."""
-    minhash_udf = make_minhash_udf(cfg)
-    toks = tokens_expr("transcript")
-    staged = corpus.select(
-        "clip_id",
-        shingle_hashes_expr(toks, cfg.shingle_k, distinct=False).alias("pos_sh"),
-        shingle_hashes_expr(toks, cfg.substr_k, distinct=False).alias("pos_sub"),
-    )
-    df = staged.select(
-        "clip_id",
-        F.array_distinct("pos_sh").alias("shingles"),
-        minimizer_keys_from(F.col("pos_sub"), cfg.substr_window).alias("substr_keys"),
-    )
-    df = df.withColumn("minhash", minhash_udf("shingles"))
-    return df.select(
-        "clip_id",
-        "shingles",
-        "substr_keys",
-        "minhash",
-        band_hashes_expr(F.col("minhash"), cfg).alias("text_bands"),
-        F.size("shingles").alias("n_shingles"),
     )

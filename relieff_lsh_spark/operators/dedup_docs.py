@@ -167,55 +167,18 @@ def _minhash_expr(shh):
     at sf0.1 in the md5-shingle era). A single aggregate references shh
     once, so the collapse stays free.
 
-    History: round 4 measured an Arrow twin of this fold as not-faster;
-    round 6 re-measured after the Horner rewrite (_minhash_fold_kernel,
-    BENCH/r06_minhash_probe.json): the kernel wins ~6% on q_lsh_candidates
-    at sf1x but LOSES 0.2-0.3s/query at sf0.1 where the python-worker round
-    trip dominates — so this JVM fold stays the default and the kernel
-    remains available via mh_kernel=True (scale-dependent choice, recorded
-    both ways)."""
+    Why a JVM fold and not an Arrow kernel: an Arrow twin (one permute
+    matrix + segmented minimum.reduceat per batch) measured ~6% faster on
+    q_lsh_candidates at sf1x but 0.2-0.3s/query slower at sf0.1, where the
+    python-worker round trip dominates (round 6,
+    BENCH/r06_minhash_probe.json)."""
     init = F.array(*[F.lit(MOD).cast("bigint")] * N_PERMS)
     return F.aggregate(
         shh, init, lambda acc, h: F.zip_with(acc, _perms_of(h), lambda a, b: F.least(a, b))
     )
 
 
-_PERM_A = np.array([2 * i + 1 for i in range(N_PERMS)], dtype=np.int64)
-_PERM_B = np.array([7919 * i + 13 for i in range(N_PERMS)], dtype=np.int64)
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _minhash_fold_kernel(h1s: pd.Series) -> pd.Series:
-    """Arrow twin of _minhash_expr: per batch, permute every shingle hash in
-    one (N_PERMS x total) int64 matrix and per-row segmented-min via
-    minimum.reduceat (the corpus path's make_minhash_udf shape, round 3).
-    Exact: h < 2^32 and the largest multiplier is 2*N_PERMS-1, so every
-    product stays far below 2^63 — identical integer values to the JVM
-    fold's (h*(2i+1) + (7919i+13)) % MOD lanes; empty rows keep the fold's
-    init value MOD. HOF folds are CodegenFallback (one interpreted
-    16-lane zip_with per SHINGLE); this is one vectorized pass per batch.
-    Equivalence pinned by tests/test_kernels_r06.py; A/B in
-    BENCH/r06_minhash_probe.json."""
-    v = h1s.to_numpy()
-    n = len(v)
-    if n == 0:
-        return pd.Series(np.empty(0, dtype=object))
-    lens = np.fromiter((len(x) for x in v), dtype=np.int64, count=n)
-    out = np.full((n, N_PERMS), MOD, dtype=np.int64)
-    tot = int(lens.sum())
-    if tot:
-        flat = np.concatenate(v)
-        m = (flat[None, :] * _PERM_A[:, None] + _PERM_B[:, None]) % MOD
-        offs = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=offs[1:])
-        nz = lens > 0
-        out[nz] = np.minimum.reduceat(m, offs[nz], axis=1).T
-    return pd.Series(list(out))
-
-
-def signature_df(
-    docs: DataFrame, keep_shingles: bool = True, mh_kernel: bool = False
-) -> DataFrame:
+def signature_df(docs: DataFrame, keep_shingles: bool = True) -> DataFrame:
     """(doc_id, [sh,] mh, bands): token md5s -> Horner shingle hashes ->
     one-pass 16-lane MinHash fold (over h1) -> band hashes.
 
@@ -232,10 +195,9 @@ def signature_df(
     docstring)."""
     d1 = _shingled(docs)
     keep = ["doc_id", "sh"] if keep_shingles else ["doc_id"]
-    fold = _minhash_fold_kernel if mh_kernel else _minhash_expr
     d3 = d1.select(
         *keep,
-        fold(F.transform(F.col("sh"), lambda s: s["h1"])).alias("mh"),
+        _minhash_expr(F.transform(F.col("sh"), lambda s: s["h1"])).alias("mh"),
     )
     d3 = barrier(d3, eager=False)
     return d3.select(
@@ -312,45 +274,52 @@ SIM_BITS = 64
 SIM_BANDS = 4
 SIM_BAND_BITS = SIM_BITS // SIM_BANDS  # 16-bit chunks: 65536 buckets/band
 SIM_HAMMING_MAX = 3  # 4 bands pigeonhole-guarantee recall up to hamming 3
-_MIN_LONG = -(1 << 63)
-
-
 _MIN_LONG_NP = np.int64(-(1 << 63))
 _POW16 = 1 << np.arange(SIM_BAND_BITS, dtype=np.int64)
-_SH32 = np.arange(32, dtype=np.int64)
+
+
+def _lane_ones(rows: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """(n, 32) per-row count of shingle hashes with bit i set, counted one
+    bit lane at a time into a reused flat buffer: the working set is two
+    flat copies of the batch's hashes, whatever the row lengths (a
+    broadcast (total_shingles, 32) matrix grows ~512 B per shingle, and
+    the Arrow batch size caps rows, not shingles per row)."""
+    ones = np.zeros((len(lens), 32), dtype=np.int64)
+    nz = lens > 0  # upstream filters size>0, but reduceat segments must
+    #                never start at an empty row's offset
+    starts = (np.cumsum(lens) - lens)[nz]
+    f = np.concatenate(rows)
+    lane = np.empty_like(f)
+    for i in range(32):
+        np.right_shift(f, i, out=lane)
+        np.bitwise_and(lane, 1, out=lane)
+        ones[nz, i] = np.add.reduceat(lane, starts)
+    return ones
 
 
 @F.pandas_udf(T.ArrayType(T.LongType()))
 def _simhash_pack_kernel(p1: pd.Series, p2: pd.Series) -> pd.Series:
-    """Arrow twin of the JVM 64-counter SimHash vote fold + chunk/pack
-    arithmetic: per batch, ONE vectorized bit-count pass over the
-    concatenated (h1, h2) shingle hashes instead of 64 interpreted
-    zip_with/shiftright lambdas per SHINGLE (HOF lambdas are
-    CodegenFallback). Returns [simhash, chunk0..chunk3] per row.
+    """SimHash vote + chunk/pack per row, vectorized per Arrow batch over
+    the concatenated (h1, h2) shingle hashes: bit i of the 64-bit shingle
+    hash is bit i of h1 for i < 32 and bit i-32 of h2 above; the signature
+    bit is set when more than half of the row's shingles have it (votes
+    2*ones_i - n > 0). Returns [simhash, chunk0..chunk3] per row.
 
-    Exactness: every step is integer arithmetic — bit extraction, counter
-    sums (ones_i), votes 2*ones_i - n, chunk packing, and the min-long
-    top-bit pack are all exact int64 ops identical in value to the column
-    expressions they replace (the A/B and hash parity are recorded in
-    OPTIMIZATION_r06.md; the DuckDB oracle is unchanged)."""
+    Every step is exact int64 arithmetic — bit counts, votes, 16-bit chunk
+    packing, and the top bit applied as one min-long addition — so the
+    values equal the DuckDB oracle's explode + group-by vote (_sim_cte)
+    and the pure-python replay in tests/test_kernels_r06.py. Replaced a
+    JVM fold of 64 interpreted zip_with/shiftright lambdas per SHINGLE
+    (HOF lambdas are CodegenFallback): 1.51x on q_simhash_neardup,
+    OPTIMIZATION_r06.md."""
     v1 = p1.to_numpy()
     v2 = p2.to_numpy()
     n = len(v1)
     if n == 0:
         return pd.Series(np.empty(0, dtype=object))
     lens = np.fromiter((len(x) for x in v1), dtype=np.int64, count=n)
-    ones1 = np.zeros((n, 32), dtype=np.int64)
-    ones2 = np.zeros((n, 32), dtype=np.int64)
-    if lens.sum():
-        f1 = np.concatenate(v1)
-        f2 = np.concatenate(v2)
-        offs = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=offs[1:])
-        nz = lens > 0  # upstream filters size>0, but reduceat segments must
-        #                never start at an empty row's offset
-        starts = offs[nz]
-        ones1[nz] = np.add.reduceat((f1[:, None] >> _SH32) & 1, starts, axis=0)
-        ones2[nz] = np.add.reduceat((f2[:, None] >> _SH32) & 1, starts, axis=0)
+    ones1 = _lane_ones(v1, lens)
+    ones2 = _lane_ones(v2, lens)
     pos1 = (2 * ones1 - lens[:, None]) > 0
     pos2 = (2 * ones2 - lens[:, None]) > 0
     c0 = pos1[:, :SIM_BAND_BITS] @ _POW16
@@ -368,13 +337,14 @@ def _simhash_pack_kernel(p1: pd.Series, p2: pd.Series) -> pd.Series:
     return pd.Series(list(out))
 
 
-def simhash_df(docs: DataFrame, kernel: bool = True) -> DataFrame:
+def simhash_df(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash, chunk0..chunk3) — 64-bit SimHash by per-bit majority
     vote over the distinct shingle hashes: the corpus pipeline's audio
     SimHash-64 (same 64/4x16 geometry, DedupConfig defaults) re-expressed
-    over text with md5 so DuckDB can replay it bit-for-bit. The per-bit
-    vote is a single shuffle-free aggregate fold over the 64-bit shingle
-    hash pairs (64 one-bit counters per doc in one pass; the DuckDB oracle
+    over text with md5 so DuckDB can replay it bit-for-bit. The h1/h2
+    Horner pair IS the 64-bit per-shingle hash (bits 0-31 from h1, 32-63
+    from h2 — no per-shingle md5, module docstring); the vote and pack run
+    in one shuffle-free Arrow pass (_simhash_pack_kernel; the DuckDB oracle
     votes via explode + group-by, same values by construction).
 
     64 bits matter at scale: a 16-bit hash gives 16 buckets/band, so every
@@ -385,89 +355,23 @@ def simhash_df(docs: DataFrame, kernel: bool = True) -> DataFrame:
     The 4 chunk columns are carried alongside the packed value because the
     pack wraps into the sign bit — re-extracting the top chunk from a
     negative bigint needs engine-specific unsigned shifts, while carrying
-    the chunks is portable arithmetic. Packing is overflow-safe in ANSI
-    mode: the top bit is split off and applied as one min-long addition.
-
-    kernel=True routes the vote fold + chunk/pack through the Arrow batch
-    kernel (_simhash_pack_kernel) — value-identical integer arithmetic,
-    measured A/B in OPTIMIZATION_r06.md."""
-    d1 = _shingled(docs)
-    if kernel:
-        d2 = d1.select(
-            "doc_id",
-            _simhash_pack_kernel(
-                F.transform("sh", lambda s: s["h1"]),
-                F.transform("sh", lambda s: s["h2"]),
-            ).alias("sv"),
-        )
-        d2 = barrier(d2, eager=False)  # one kernel pass shared by every
-        # downstream consumer (bands + both join sides in the neardup query)
-        return d2.select(
-            "doc_id",
-            F.element_at("sv", 1).alias("simhash"),
-            *[
-                F.element_at("sv", b + 2).alias(f"chunk{b}")
-                for b in range(SIM_BANDS)
-            ],
-        )
-
-    # the h1/h2 Horner pair IS the 64-bit per-shingle hash (bits 0-31 from
-    # h1, 32-63 from h2) — no per-shingle md5 at all (module docstring)
-    def bitvec(s):
-        return F.array(*[
-            F.shiftright(s["h1" if i < 32 else "h2"], i % 32)
-            .bitwiseAND(F.lit(1))
-            for i in range(SIM_BITS)
-        ])
-
-    # single shuffle-free fold: 64 one-bit counters per doc in one pass over
-    # the shingle hashes (the explode + 64-column hash aggregate this
-    # replaces shuffled |shingles| rows per doc); votes_i = 2*ones_i - n.
-    # Checkpoint barrier before the per-bit unpacking — `ones` must be an
-    # attribute there, or alias inlining re-runs the fold per chunk (the
-    # CollapseProject trap, module docstring).
-    init = F.array_repeat(F.lit(0).cast("bigint"), SIM_BITS)
-    d2 = d1.select(
+    the chunks is portable arithmetic."""
+    d2 = _shingled(docs).select(
         "doc_id",
-        F.size("sh").alias("n_sh"),
-        F.aggregate(
-            F.col("sh"), init,
-            lambda acc, s: F.zip_with(acc, bitvec(s), lambda a, b: a + b),
-        ).alias("ones"),
+        _simhash_pack_kernel(
+            F.transform("sh", lambda s: s["h1"]),
+            F.transform("sh", lambda s: s["h2"]),
+        ).alias("sv"),
     )
-    d2 = barrier(d2, eager=False)
-
-    def chunk(b: int):
-        terms = [
-            F.when(
-                F.element_at("ones", b * SIM_BAND_BITS + j + 1) * 2 - F.col("n_sh") > 0,
-                F.lit(1 << j),
-            ).otherwise(F.lit(0))
-            for j in range(SIM_BAND_BITS)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out.cast("bigint")
-
-    with_chunks = d2.select(
-        "doc_id", *[chunk(b).alias(f"chunk{b}") for b in range(SIM_BANDS)]
-    )
-    # pack 4x16 bits; bit 63 (top bit of chunk3) applied as min-long so no
-    # intermediate exceeds int64
-    low63 = (
-        F.col("chunk0")
-        + F.col("chunk1") * F.lit(1 << 16)
-        + F.col("chunk2") * F.lit(1 << 32)
-        + F.col("chunk3").bitwiseAND(F.lit(0x7FFF)) * F.lit(1 << 48)
-    )
-    packed = F.when(
-        F.shiftright(F.col("chunk3"), 15).bitwiseAND(F.lit(1)) == 1,
-        low63 + F.lit(_MIN_LONG),
-    ).otherwise(low63)
-    return with_chunks.select(
-        "doc_id", packed.cast("bigint").alias("simhash"),
-        *[f"chunk{b}" for b in range(SIM_BANDS)],
+    d2 = barrier(d2, eager=False)  # one kernel pass shared by every
+    # downstream consumer (bands + both join sides in the neardup query)
+    return d2.select(
+        "doc_id",
+        F.element_at("sv", 1).alias("simhash"),
+        *[
+            F.element_at("sv", b + 2).alias(f"chunk{b}")
+            for b in range(SIM_BANDS)
+        ],
     )
 
 
@@ -534,28 +438,6 @@ def q_lsh_candidates_refined(docs: DataFrame) -> DataFrame:
     )
 
 
-def _prefiltered(cand: DataFrame, sig: DataFrame) -> DataFrame:
-    """Fixed-width MinHash prefilter ahead of the shingle-array join (the
-    corpus verify stage's tier-1, operators/verify.py): keep pairs with
-    >= PREFILTER_MIN_AGREE agreeing minhash lanes.
-
-    Used standalone by the profiling harness (BENCH/jv_profile.py);
-    q_jaccard_verify applies the same predicate inside its combined 2-join
-    shape (measured faster there — see the query docstring)."""
-    from relieff_lsh_spark.functions.distance import minhash_agree_n
-
-    mh = sig.select("doc_id", "mh")
-    return (
-        cand.join(mh.select(F.col("doc_id").alias("a"), F.col("mh").alias("mh_a")), "a")
-        .join(mh.select(F.col("doc_id").alias("b"), F.col("mh").alias("mh_b")), "b")
-        .where(
-            minhash_agree_n(F.col("mh_a"), F.col("mh_b"), N_PERMS)
-            >= PREFILTER_MIN_AGREE
-        )
-        .select("a", "b")
-    )
-
-
 def q_jaccard_verify(docs: DataFrame) -> DataFrame:
     """Exact-Jaccard verification of the LSH candidates (threshold 0.5),
     behind the MinHash-estimate prefilter — shingle arrays are only shuffled
@@ -576,7 +458,7 @@ def q_jaccard_verify(docs: DataFrame) -> DataFrame:
     # candidates/simhash queries, with 2 consumers, go FASTER without the
     # extra eager store — not a universal rule.
     #
-    # Join shape (round-5 measurement, BENCH/jv_profile.py at sf1x): ONE
+    # Join shape (round-5 measurement at sf1x): ONE
     # pair of doc-keyed joins carrying mh AND the shingle hashes together,
     # with the prefilter as a post-join predicate — not separate prefilter
     # joins followed by sh joins. Four joins with a "narrow first"
@@ -784,8 +666,9 @@ _CAND = (
     + ",\n  cand AS (SELECT a, b FROM capped_cand)"
 )
 
-# MinHash-estimate prefilter: exact SQL mirror of _prefiltered (lane
-# agreement counted from the long-format mh CTE)
+# MinHash-estimate prefilter: exact SQL mirror of q_jaccard_verify's
+# minhash_agree_n >= PREFILTER_MIN_AGREE predicate (lane agreement counted
+# from the long-format mh CTE)
 _PRE = f"""
   pre AS (
     SELECT c.a, c.b
@@ -951,7 +834,7 @@ _PACK = (
 def _sim_cte(src_sh: str = "sh") -> str:
     """CTEs sh(doc_id, h1, h2) -> sim(doc_id, simhash, chunk0..chunk3):
     the Horner pair is the 64-bit per-shingle hash (bits 0-31 from h1,
-    32-63 from h2 — the exact twin of simhash_df's bitvec)."""
+    32-63 from h2 — the exact twin of _simhash_pack_kernel's lanes)."""
     return f"""
   shh AS (SELECT doc_id, h1 AS hlo, h2 AS hhi FROM {src_sh}),
   votes AS (SELECT doc_id, {_VOTES} FROM shh GROUP BY doc_id),

@@ -13,8 +13,9 @@ Arrow seqfold kernel (functions/distance.cosine_seqfold), a bit-identical
 replacement for the interpreted HOF fold — HOF lambdas are CodegenFallback,
 ~200 interpreted evals per 64-dim pair, which dominated every cosine-verify
 query once pairs numbered in the millions (measured 1.4-1.8x whole-query at
-sf1x, BENCH/cos_kernel_probe.json; equivalence argument in the kernel's
-docstring, pinned by tests/test_ann.py::test_cosine_seqfold_bitexact).
+sf1x, recorded in BENCH/cos_kernel_probe.json; equivalence argument in the
+kernel's docstring, pinned against _cos_hof by
+tests/test_ann.py::test_cosine_seqfold_bitexact).
 """
 
 from __future__ import annotations
@@ -91,14 +92,17 @@ def _group_pairs_cos(pdf: pd.DataFrame) -> pd.DataFrame:
     cosine. Per-pair arithmetic is the exact dim-by-dim left fold of
     _cos_seqfold_kernel (acc += A[:,i]*B[:,i] — each pair's value depends
     only on its own two vectors), so values are bit-identical to the
-    join+kernel form; F.round stays Spark-side (HALF_UP, not numpy's
-    half-even)."""
+    _cos_hof spec; F.round stays Spark-side (HALF_UP, not numpy's
+    half-even). A vec_id repeated within a group never pairs
+    with itself: a < b is strict."""
     ids = pdf["vec_id"].to_numpy()
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
     M = np.stack(pdf["v"].to_numpy())[order]
     n = len(ids)
     ia, ib = np.triu_indices(n, k=1)
+    distinct = ids[ia] != ids[ib]
+    ia, ib = ia[distinct], ib[distinct]
     A, B = M[ia], M[ib]
     m = len(ia)
     dot = np.zeros(m)
@@ -132,7 +136,8 @@ def q_embedding_neardup(emb: DataFrame) -> DataFrame:
     boundary ONCE per group instead of riding every pair through two joins
     (~(label_n)/2 x less Arrow traffic; the label cap bounds a group's
     pair fan-out at EMB_LABEL_CAP^2/2). Values bit-identical (docstring of
-    _group_pairs_cos); measured A/B in BENCH/r06_groupcos_probe_sf1x.json."""
+    _group_pairs_cos; pinned by the DuckDB oracle hash); 1.55x on this
+    query in round 6 (BENCH/r06_groupcos_probe_sf1x.json)."""
     counts = emb.groupBy("label").agg(F.count("*").alias("label_n"))
     kept = emb.join(counts, "label").where(F.col("label_n") <= EMB_LABEL_CAP)
     pairs = (
@@ -145,21 +150,6 @@ def q_embedding_neardup(emb: DataFrame) -> DataFrame:
     )
     return (
         pairs.withColumn("cos_sim", F.round(F.col("cos_raw"), 6))
-        .where(F.col("cos_sim") >= NEARDUP_MIN_COS)
-        .select("label", "a", "b", "cos_sim")
-    )
-
-
-def q_embedding_neardup_joined(emb: DataFrame) -> DataFrame:
-    """Round-5 join+kernel form (kept for the A/B probe and parity test)."""
-    counts = emb.groupBy("label").agg(F.count("*").alias("label_n"))
-    kept = emb.join(counts, "label").where(F.col("label_n") <= EMB_LABEL_CAP)
-    a = kept.select(F.col("vec_id").alias("a"), F.col("label"), _dbl("embedding").alias("va"))
-    b = kept.select(F.col("vec_id").alias("b"), F.col("label"), _dbl("embedding").alias("vb"))
-    return (
-        a.join(b, "label")
-        .where(F.col("a") < F.col("b"))
-        .withColumn("cos_sim", F.round(_cos(F.col("va"), F.col("vb")), 6))
         .where(F.col("cos_sim") >= NEARDUP_MIN_COS)
         .select("label", "a", "b", "cos_sim")
     )

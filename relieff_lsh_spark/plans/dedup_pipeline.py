@@ -154,7 +154,7 @@ class DedupPipeline:
 
         sigs = _run_stage("signatures", lambda: (self.stage_signatures(), {}))
         # per-codec quarantine audit: clips whose codec has no in-container
-        # decoder carry NULL simhash (functions/audio.py try_simhash) and are
+        # decoder carry NULL simhash (functions/audio.py make_simhash_udf) and are
         # COUNTED here rather than killing tasks; they still dedup through
         # the exact/text/substr channels.
         quarantined = {

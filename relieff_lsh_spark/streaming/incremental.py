@@ -273,18 +273,13 @@ class IncrementalDedup:
             return self.spark.createDataFrame([], "a string, b string")
         return df.select("a", "b")
 
-    def components(self) -> ComponentsResult:
-        """Incrementally-maintained components: stored per-vertex labels
-        resolved through the closure of the (small) label-merge log. No
-        fixpoint over the accumulated edge history."""
-        verts = self._state("comp_vertices")
-        if verts is None:
-            empty = self.spark.createDataFrame([], "clip_id string, component_id string")
-            return ComponentsResult(components=empty, iterations=0, converged=True)
+    def _merge_closure(self) -> tuple[DataFrame, ComponentsResult] | None:
+        """Closure of the current label-merge log: (label -> root mapping,
+        the fixpoint's result), or None when the log is empty. Shared by
+        components() (resolve stored labels) and compact() (fold them)."""
         merges = self._state("comp_merges")
         if merges is None or merges.isEmpty():
-            comps = verts.select("clip_id", F.col("label").alias("component_id"))
-            return ComponentsResult(components=comps, iterations=0, converged=True)
+            return None
         labels = (
             merges.select(F.col("u").alias("clip_id"))
             .union(merges.select(F.col("v").alias("clip_id")))
@@ -296,6 +291,21 @@ class IncrementalDedup:
         mapping = res.components.select(
             F.col("clip_id").alias("label"), F.col("component_id").alias("root")
         )
+        return mapping, res
+
+    def components(self) -> ComponentsResult:
+        """Incrementally-maintained components: stored per-vertex labels
+        resolved through the closure of the (small) label-merge log. No
+        fixpoint over the accumulated edge history."""
+        verts = self._state("comp_vertices")
+        if verts is None:
+            empty = self.spark.createDataFrame([], "clip_id string, component_id string")
+            return ComponentsResult(components=empty, iterations=0, converged=True)
+        closure = self._merge_closure()
+        if closure is None:
+            comps = verts.select("clip_id", F.col("label").alias("component_id"))
+            return ComponentsResult(components=comps, iterations=0, converged=True)
+        mapping, res = closure
         comps = (
             verts.select("clip_id", "label")
             # the merge log holds one node per merge EVENT since the last
@@ -491,22 +501,8 @@ class IncrementalDedup:
         # Closure of the CURRENT merge log, computed before any table is
         # rewritten (compaction runs between micro-batches, so both
         # components tables are a consistent snapshot).
-        fold_mapping = None
-        merges = self._state("comp_merges")
-        if merges is not None and not merges.isEmpty():
-            labels = (
-                merges.select(F.col("u").alias("clip_id"))
-                .union(merges.select(F.col("v").alias("clip_id")))
-                .distinct()
-            )
-            res = connected_components(
-                merges.select(F.col("u").alias("a"), F.col("v").alias("b")),
-                labels,
-            )
-            fold_mapping = res.components.select(
-                F.col("clip_id").alias("label"),
-                F.col("component_id").alias("root"),
-            ).localCheckpoint()
+        closure = self._merge_closure()
+        fold_mapping = None if closure is None else closure[0].localCheckpoint()
         for table, part_col in STATE_TABLES.items():
             root = self._live_root(table)
             if not os.path.isdir(root):

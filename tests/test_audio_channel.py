@@ -8,7 +8,6 @@ import pytest
 
 from relieff_lsh_spark.config import DedupConfig
 from relieff_lsh_spark.functions.audio import (
-    audio_signatures,
     decode_pcm,
     simhash64,
     simhash_planes,
@@ -174,16 +173,20 @@ def test_cross_codec_duplicates_cluster_via_audio_channel(spark, cfg, tmp_path):
 
 
 def test_audio_signatures_spark_matches_local(spark, cfg, tiny_corpus_dir):
+    """The product signature path's simhash column equals the local
+    decode -> fingerprint -> simhash64 chain, clip by clip."""
+    from relieff_lsh_spark.functions.signatures import clip_signatures
+
     corpus = spark.read.parquet(f"{tiny_corpus_dir}/corpus.parquet").limit(20)
-    rows = audio_signatures(corpus, cfg).collect()
+    rows = clip_signatures(corpus, cfg).select("clip_id", "simhash").collect()
     pdf = corpus.select("clip_id", "bytes", "codec").toPandas().set_index("clip_id")
     planes = simhash_planes(cfg)
+    assert len(rows) == 20
     for r in rows:
         buf = bytes(pdf.loc[r["clip_id"], "bytes"])
         x, sr = decode_pcm(buf, pdf.loc[r["clip_id"], "codec"])
         expect = simhash64(spectral_fingerprint(x, sr, cfg), planes)
         assert r["simhash"] == expect
-        assert r["n_samples"] == len(x)
 
 
 def test_mixed_codec_corpus_quarantined(spark, tiny_corpus_dir, cfg, tmp_path):

@@ -1,8 +1,10 @@
-"""Round-6 kernel-equivalence tests: the flattened intersect kernel and the
-Arrow SimHash vote/pack kernel must be value-identical to the forms they
-replaced (per-row np.intersect1d loop; JVM 64-counter HOF fold)."""
+"""Arrow kernel tests: the flattened intersect kernel, the SimHash vote/pack
+kernel, the grouped cosine pair generator and the unrolled MinHash lane
+agreement, each checked against a pure-python expectation or literals."""
 
 from __future__ import annotations
+
+import tracemalloc
 
 import numpy as np
 import pandas as pd
@@ -20,7 +22,7 @@ def _pairs(rng, k):
     return h1[idx], h2[idx]
 
 
-def test_intersect_flat_matches_perrow_kernel():
+def test_intersect_flat_kernel_matches_set_intersection():
     rng = np.random.default_rng(13)
     rows_a, rows_b = [], []
     for i in range(300):
@@ -38,10 +40,13 @@ def test_intersect_flat_matches_perrow_kernel():
         rows_a.append((a1, a2))
         rows_b.append((b1, b2))
     s = [pd.Series([r[j] for r in rows]) for rows in (rows_a, rows_b) for j in (0, 1)]
-    flat = dist._nint_flat_kernel.func(s[0], s[1], s[2], s[3])
-    perrow = dist._nint_perrow_kernel.func(s[0], s[1], s[2], s[3])
-    assert (flat.to_numpy() == perrow.to_numpy()).all()
-    assert flat.max() >= 5  # the planted overlaps were exercised
+    got = dist._nint_flat_kernel.func(s[0], s[1], s[2], s[3]).tolist()
+    want = [
+        len(set(zip(a1.tolist(), a2.tolist())) & set(zip(b1.tolist(), b2.tolist())))
+        for (a1, a2), (b1, b2) in zip(rows_a, rows_b)
+    ]
+    assert got == want
+    assert max(got) >= 5  # the planted overlaps were exercised
 
 
 def test_intersect_flat_kernel_empty_batch():
@@ -50,7 +55,7 @@ def test_intersect_flat_kernel_empty_batch():
 
 
 def test_simhash_pack_kernel_matches_fold_reference():
-    """Pure-python replay of the JVM 64-counter fold + chunk/pack."""
+    """Pure-python replay of the 64-counter vote + chunk/pack."""
 
     def ref_row(h1s, h2s):
         n = len(h1s)
@@ -88,118 +93,67 @@ def test_simhash_pack_kernel_matches_fold_reference():
     assert any(int(got.iloc[i][0]) < 0 for i in range(120))
 
 
-def test_minhash_fold_kernel_matches_reference():
-    def ref(h1s):
-        out = [dd.MOD] * dd.N_PERMS
-        for h in h1s:
-            for i in range(dd.N_PERMS):
-                out[i] = min(out[i], (int(h) * (2 * i + 1) + (7919 * i + 13)) % dd.MOD)
-        return out
-
-    rng = np.random.default_rng(3)
-    rows = [
-        rng.integers(0, 2**32, int(rng.integers(0, 50)), dtype=np.int64)
-        for _ in range(150)
-    ]
-    got = dd._minhash_fold_kernel.func(pd.Series(rows))
-    for i in range(150):
-        assert list(got.iloc[i]) == ref(rows[i])
-    assert any(len(r) == 0 for r in rows)  # empty rows stayed at MOD init
-
-
-@pytest.mark.usefixtures("spark")
-def test_signature_df_kernel_matches_jvm_fold(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    jvm = sorted(
-        map(tuple, dd.signature_df(docs, keep_shingles=False, mh_kernel=False)
-            .select("doc_id", "mh", "bands").collect())
-    )
-    ker = sorted(
-        map(tuple, dd.signature_df(docs, keep_shingles=False, mh_kernel=True)
-            .select("doc_id", "mh", "bands").collect())
-    )
-    assert jvm == ker and len(jvm) > 0
+def test_simhash_pack_kernel_memory_bounded_on_long_row():
+    """One 400k-shingle document must not need per-shingle x 32-lane
+    temporaries: the kernel's peak traced allocation stays under 16 MB
+    (the two flat input copies it needs are 6.4 MB)."""
+    rng = np.random.default_rng(5)
+    n = 400_000
+    p1 = pd.Series([rng.integers(0, 2**32, n, dtype=np.int64)])
+    p2 = pd.Series([rng.integers(0, 2**32, n, dtype=np.int64)])
+    tracemalloc.start()
+    try:
+        out = dd._simhash_pack_kernel.func(p1, p2)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert len(out) == 1
+    assert peak < 16 * 2**20, f"peak {peak / 2**20:.1f} MiB"
 
 
-@pytest.mark.usefixtures("spark")
-def test_minhash_agree_n_matches_hof(spark):
-    from pyspark.sql import functions as F
+def test_group_pairs_cos_skips_repeated_vec_id():
+    """A vec_id repeated inside one label group is never paired with
+    itself; every other pair comes out once with a < b."""
+    import relieff_lsh_spark.operators.knn as knn
 
-    import relieff_lsh_spark.functions.distance as dist
-
-    rows = [
-        ([1, 2, 3, 4], [1, 9, 3, 7]),   # 2 agree
-        ([5, 5, 5, 5], [5, 5, 5, 5]),   # 4 agree
-        ([1, 2, 3, 4], None),           # NULL side -> NULL
-        (None, None),
-    ]
-    df = spark.createDataFrame(rows, "a: array<bigint>, b: array<bigint>")
-    got = df.select(
-        dist.minhash_agree(F.col("a"), F.col("b")).alias("hof"),
-        dist.minhash_agree_n(F.col("a"), F.col("b"), 4).alias("unrolled"),
-    ).collect()
-    for r in got:
-        assert r["hof"] == r["unrolled"]
+    pdf = pd.DataFrame({
+        "label": [3, 3, 3, 3],
+        "vec_id": [7, 2, 7, 5],
+        "v": [np.array([1.0, 0.0]), np.array([0.0, 1.0]),
+              np.array([1.0, 0.0]), np.array([1.0, 1.0])],
+    })
+    out = knn._group_pairs_cos(pdf)
+    assert not (out["a"] == out["b"]).any()
+    assert (out["a"] < out["b"]).all()
+    assert sorted(zip(out["a"], out["b"])) == [(2, 5), (2, 7), (2, 7), (5, 7), (5, 7)]
+    assert set(out["label"]) == {3}
 
 
 @pytest.mark.usefixtures("spark")
 def test_minhash_agree_n_short_or_null_array_under_ansi(spark):
-    """Under ANSI mode an array shorter than n, or a NULL array, yields
-    NULL (as the HOF fold does) instead of failing the query."""
+    """With ANSI mode on and off: agreeing lanes are counted, and an array
+    shorter than n or a NULL array yields NULL instead of failing the
+    query."""
     from pyspark.sql import functions as F
 
     rows = [
         ([1, 2, 3, 4], [1, 9, 3, 7]),   # 2 agree
+        ([5, 5, 5, 5], [5, 5, 5, 5]),   # 4 agree
         ([1, 2], [1, 2, 3, 4]),         # short side -> NULL
         (None, [1, 2, 3, 4]),           # NULL side -> NULL
+        (None, None),
     ]
     df = spark.createDataFrame(rows, "a: array<bigint>, b: array<bigint>")
     prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
-        got = [
-            r[0]
-            for r in df.select(
-                dist.minhash_agree_n(F.col("a"), F.col("b"), 4)
-            ).collect()
-        ]
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = [
+                r[0]
+                for r in df.select(
+                    dist.minhash_agree_n(F.col("a"), F.col("b"), 4)
+                ).collect()
+            ]
+            assert got == [2, 4, None, None, None], ansi
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
-    assert got == [2, None, None]
-
-
-@pytest.mark.usefixtures("spark")
-def test_simhash_df_kernel_matches_jvm_fold(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    jvm = sorted(map(tuple, dd.simhash_df(docs, kernel=False).collect()))
-    ker = sorted(map(tuple, dd.simhash_df(docs, kernel=True).collect()))
-    assert jvm == ker and len(jvm) > 0
-
-
-@pytest.mark.usefixtures("spark")
-def test_embedding_neardup_grouped_matches_joined(spark):
-    """The round-6 grouped applyInPandas cosine stage must reproduce the
-    join+pairwise-kernel form exactly (same pairs, same rounded cosines)."""
-    import relieff_lsh_spark.operators.knn as knn
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    grouped = sorted(map(tuple, knn.q_embedding_neardup(emb).collect()))
-    joined = sorted(map(tuple, knn.q_embedding_neardup_joined(emb).collect()))
-    assert grouped == joined and len(grouped) > 0
-
-
-@pytest.mark.usefixtures("spark")
-def test_jaccard_verify_flat_kernel_spark_parity(spark):
-    """Whole-query parity of the flat intersect kernel vs the per-row form
-    on the real query path (q_jaccard_verify at sf0.001)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    orig = dist.intersect_count_u64pairs
-    flat = sorted(map(tuple, dd.q_jaccard_verify(docs).collect()))
-    try:
-        dist.intersect_count_u64pairs = (
-            lambda a1, a2, b1, b2: dist._nint_perrow_kernel(a1, a2, b1, b2)
-        )
-        perrow = sorted(map(tuple, dd.q_jaccard_verify(docs).collect()))
-    finally:
-        dist.intersect_count_u64pairs = orig
-    assert flat == perrow and len(flat) > 0

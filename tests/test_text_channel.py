@@ -1,28 +1,24 @@
-"""Text channel: JVM shingling, MinHash UDF, banding, minimizer keys."""
+"""Text channel of the product signature path (clip_signatures): token
+hashing, k-shingles, MinHash UDF, banding, minimizer keys."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-from relieff_lsh_spark.config import DedupConfig
-from relieff_lsh_spark.functions.text import (
-    band_hashes_expr,
-    make_minhash_udf,
-    minimizer_keys_expr,
-    shingle_hashes_expr,
-    text_signatures,
-    tokens_expr,
-)
+from relieff_lsh_spark.functions.signatures import clip_signatures
+from relieff_lsh_spark.functions.text import band_hashes_expr
 from relieff_lsh_spark.plans.oracle import jaccard, shingle_set
 
 
 def _sig_df(spark, cfg, texts):
+    """clip_signatures over transcript-only rows (NULL bytes/codec: the
+    audio channel quarantines them), in input order."""
     df = spark.createDataFrame(
-        [(f"c{i:04d}", t) for i, t in enumerate(texts)], ["clip_id", "transcript"]
+        [(f"c{i:04d}", t, None, None) for i, t in enumerate(texts)],
+        "clip_id string, transcript string, bytes binary, codec string",
     )
-    return text_signatures(df, cfg)
+    return clip_signatures(df, cfg).orderBy("clip_id")
 
 
 def test_shingle_counts_match_python(spark, cfg):
@@ -33,14 +29,11 @@ def test_shingle_counts_match_python(spark, cfg):
         "",                         # empty -> 0
         "  padded   spacing  here and more words  ",
     ]
-    rows = (
-        spark.createDataFrame([(t,) for t in texts], ["transcript"])
-        .select(F.size(shingle_hashes_expr(tokens_expr("transcript"), cfg.shingle_k)).alias("n"))
-        .collect()
-    )
-    got = [r["n"] for r in rows]
+    rows = _sig_df(spark, cfg, texts).select("n_shingles", "simhash").collect()
+    got = [r["n_shingles"] for r in rows]
     want = [len(shingle_set(t, cfg.shingle_k)) for t in texts]
     assert got == want
+    assert all(r["simhash"] is None for r in rows)
 
 
 def test_identical_text_identical_signature(spark, cfg):
@@ -79,35 +72,17 @@ def test_unrelated_texts_share_no_band(spark, cfg):
 def test_minimizer_keys_catch_substring(spark, cfg):
     inner = "alpha beta gamma delta epsilon zeta"
     outer = f"pre1 pre2 pre3 {inner} post1 post2"
-    rows = (
-        spark.createDataFrame([(inner,), (outer,)], ["transcript"])
-        .select(
-            minimizer_keys_expr(
-                tokens_expr("transcript"), cfg.substr_k, cfg.substr_window
-            ).alias("keys")
-        )
-        .collect()
-    )
-    k_in, k_out = set(rows[0]["keys"]), set(rows[1]["keys"])
+    rows = _sig_df(spark, cfg, [inner, outer]).collect()
+    k_in, k_out = set(rows[0]["substr_keys"]), set(rows[1]["substr_keys"])
     assert k_in & k_out, "contained transcript must share a minimizer key"
 
 
 def test_minimizer_short_text_still_keyed(spark, cfg):
-    rows = (
-        spark.createDataFrame([("a b c d",), ("a b c",), ("",)], ["transcript"])
-        .select(
-            F.size(
-                minimizer_keys_expr(
-                    tokens_expr("transcript"), cfg.substr_k, cfg.substr_window
-                )
-            ).alias("n")
-        )
-        .collect()
-    )
-    ns = [r["n"] for r in rows]
-    assert ns[0] >= 1      # exactly k tokens -> 1 shingle -> keyed
-    assert ns[1] == 0      # < k tokens: no shingle, no key
-    assert ns[2] == 0
+    rows = _sig_df(spark, cfg, ["a b c d", "a b c", ""]).select(
+        F.size("substr_keys").alias("n")
+    ).collect()
+    # exactly k tokens -> 1 shingle -> 1 key; < k tokens: no shingle, no key
+    assert [r["n"] for r in rows] == [1, 0, 0]
 
 
 def test_band_hash_band_index_salted(spark, cfg):
