@@ -130,6 +130,35 @@ def test_group_pairs_cos_skips_repeated_vec_id():
 
 
 @pytest.mark.usefixtures("spark")
+def test_minhash_agree_n_matches_hof(spark):
+    """The unrolled lane count equals the zip_with/aggregate fold it
+    replaces (the fold is kept here as the spec), NULL cases included."""
+    from pyspark.sql import functions as F
+
+    def agree_hof(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+            F.lit(0),
+            lambda acc, v: acc + v,
+        )
+
+    rows = [
+        ([1, 2, 3, 4], [1, 9, 3, 7]),   # 2 agree
+        ([5, 5, 5, 5], [5, 5, 5, 5]),   # 4 agree
+        ([1, 2, 3, 4], None),           # NULL side -> NULL
+        (None, None),
+    ]
+    df = spark.createDataFrame(rows, "a: array<bigint>, b: array<bigint>")
+    got = df.select(
+        agree_hof(F.col("a"), F.col("b")).alias("hof"),
+        dist.minhash_agree_n(F.col("a"), F.col("b"), 4).alias("unrolled"),
+    ).collect()
+    assert [r["hof"] for r in got] == [2, 4, None, None]
+    for r in got:
+        assert r["hof"] == r["unrolled"]
+
+
+@pytest.mark.usefixtures("spark")
 def test_minhash_agree_n_short_or_null_array_under_ansi(spark):
     """With ANSI mode on and off: agreeing lanes are counted, and an array
     shorter than n or a NULL array yields NULL instead of failing the
