@@ -16,10 +16,15 @@ Usage (local, no spark-submit):
     python jobs/dedup.py --corpus ... --warehouse ... --master local[8]
 
 Flags mirror the reference's knobs where they have an analog:
-  reference -p num_partitions  -> --shuffle-partitions
-  reference -c maxComparisons  -> --bucket-cap (per-bucket work budget)
-  reference -n/-l (tables/key) -> --bands/--rows-per-band (b x r banding)
+  reference -p num_partitions  -> --shuffle-partitions (default: the
+                                  session's spark.sql.shuffle.partitions)
+  reference -c maxComparisons  -> --bucket-cap / --salt-factor (per-bucket
+                                  work budget)
+  reference -n/-l (tables/key) -> --bands/--rows-per-band (b x r banding;
+                                  the MinHash length is bands x rows)
   reference -f graph file      -> --resume (read completed stage snapshots)
+plus the thresholds --jaccard-min / --hamming-max and the shingle width
+--shingle-k. Every DedupConfig field is one flag.
 """
 
 from __future__ import annotations
@@ -47,14 +52,16 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--warehouse", required=True, help="snapshot warehouse dir")
     p.add_argument("--master", default=None,
                    help="Spark master (omit under spark-submit)")
-    p.add_argument("--shuffle-partitions", type=int, default=32)
+    p.add_argument("--shuffle-partitions", type=int, default=None,
+                   help="shuffle width (default: the session's "
+                   "spark.sql.shuffle.partitions, the core count under a "
+                   "plain python launch)")
     p.add_argument("--resume", action="store_true",
                    help="skip stages whose snapshot already exists")
     p.add_argument("--metrics-out", default=None,
                    help="write the run-metrics JSON here (default: stdout only)")
     # config knobs (defaults = canonical FIXTURES.md §4 config)
     p.add_argument("--shingle-k", type=int, default=5)
-    p.add_argument("--n-perms", type=int, default=128)
     p.add_argument("--bands", type=int, default=32)
     p.add_argument("--rows-per-band", type=int, default=4)
     p.add_argument("--jaccard-min", type=float, default=0.8)
@@ -73,7 +80,6 @@ def main(argv: list[str] | None = None) -> dict:
 
     cfg = DedupConfig(
         shingle_k=args.shingle_k,
-        n_perms=args.n_perms,
         bands=args.bands,
         rows_per_band=args.rows_per_band,
         jaccard_min=args.jaccard_min,

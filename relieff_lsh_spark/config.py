@@ -2,113 +2,67 @@
 
 The analog of the reference's ``KNiNeConfiguration`` bundle (reference
 ReliefFFeatureSelector.scala:491-494 — radius0 / numTables / keyLength /
-maxComparisons / refine), reshaped for near-duplicate detection. Thresholds
-are *configuration*, never derived from sampled data (the reference reads a
+maxComparisons), reshaped for near-duplicate detection. Thresholds are
+*configuration*, never derived from sampled data (the reference reads a
 global constant from the first edge at R:372 — a smell SURVEY.md §4 tells us
 to avoid).
 
-The canonical values below are pinned by FIXTURES.md §4 so that "same
+`DedupConfig` holds only what a caller sets: the thresholds, the text
+banding, the skew budget and the shuffle width. Everything else is either
+derived here (`n_perms = bands * rows_per_band`) or a module constant beside
+the one function that reads it (the fingerprint/FFT shape in
+functions/audio.py, the winnowing widths in functions/signatures.py, the
+verify prefilter in operators/verify.py, the SimHash geometry and the seed
+below). The canonical values are pinned by FIXTURES.md §4 so that "same
 shingle/signature config" (BASELINE.json) is well-defined across the
 pipeline, the brute-force oracle, and the bench harness.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, asdict
+
+# Seed of every random signature parameter (MinHash coefficients in
+# functions/text.py, SimHash hyperplanes in functions/audio.py).
+SEED = 42
+
+# Audio channel: SimHash-64 split into 4 x 16-bit bands for the multi-index
+# candidate join — pigeonhole-exact for hamming_max <= 3.
+SIMHASH_BITS = 64
+SIMHASH_BANDS = 4
 
 
 @dataclass(frozen=True)
 class DedupConfig:
     # --- text channel: k-shingle MinHash, banded b x r (OR-construction) ---
     shingle_k: int = 5          # word-shingle width
-    n_perms: int = 128          # MinHash signature length
     bands: int = 32             # LSH bands (b)
-    rows_per_band: int = 4      # rows per band (r); b*r == n_perms
+    rows_per_band: int = 4      # rows per band (r); n_perms = b * r
     jaccard_min: float = 0.8    # exact-Jaccard verification threshold
 
     # --- audio channel: spectral fingerprint -> SimHash-64 ---
-    simhash_bits: int = 64
-    simhash_bands: int = 4      # 4 bands x 16 bits: pigeonhole-exact for hamming<=3
     hamming_max: int = 3
-    n_freq_bands: int = 64      # spectral fingerprint dimensionality
-    fmax_hz: float = 4000.0     # analyze 0..4kHz (valid for all sr >= 8kHz)
-    fft_window: int = 1024
-    fft_hop: int = 512
-    max_fft_frames: int = 64    # evenly-spaced frame cap (mean-spectrum
-                                # estimator; bounds FFT memory bandwidth)
-
-    # --- substring channel: winnowing minimizers over word shingles ---
-    substr_k: int = 4           # shingle width for minimizer keys
-    substr_window: int = 2      # winnowing window; guarantees any shared
-                                # span of >= substr_k + substr_window - 1 words
-                                # shares a minimizer key
-
-    # --- refinement pass analog (reference refineGroupedGraph, R:181-187;
-    #     SURVEY.md §2.7 L4): a second banding with rotated (half-band-offset)
-    #     boundaries, catching near-threshold pairs whose matching rows
-    #     straddle the primary band cuts. OFF by default: the primary
-    #     OR-construction already clears the 0.99 analytic recall budget
-    #     (text_recall_at_threshold); the reference needs its refine pass
-    #     because its K-NN lists can be incomplete, ours is a threshold test.
-    refine_bands: bool = False
-
-    # --- verify-stage prefilter (tier 1 of the two-tier verify) ---
-    # Candidate pairs only join their (unbounded-width) shingle arrays for
-    # exact-Jaccard verification when at least this many of the bands
-    # (32 x 8 B, already in the signature) agree — or the pair can pass via
-    # another channel. One agreeing band is what MADE it a candidate, so
-    # requiring a second is the cheapest possible "can this pass Jaccard?"
-    # screen: at jaccard_min=0.8 a true pair misses with probability
-    # P(Binom(bands, j^r) <= min_bands - 1) ~ 1.7e-6; a spurious collision
-    # (j <= 0.5) has p_band = j^r <= 0.0625 and is pruned with probability
-    # >= 0.86 before the shingle arrays ever move. The first design used the
-    # full minhash signature (128 x 8 B) as the tier-1 payload — measured
-    # 2.3x verify-stage wall vs the band columns on the n=640k bench, since
-    # 1 KB/side exceeds typical shingle arrays; the band count is both
-    # smaller (256 B) and a TIGHTER screen. With refine_bands on, the
-    # agreement also counts the (bands - 1) rotated band hashes — a pair
-    # whose ONLY collision is a rotated band starts from 1 agreement like
-    # any primary candidate instead of being pruned outright (round-3
-    # ADVICE); the screen is marginally looser over 63 bands than 32
-    # (spurious pass p: 1-(1-p_b)^62 given one collision), which only costs
-    # a few extra tier-2 rows — recall is what the refine pass buys.
-    verify_prefilter_min_bands: int = 2
 
     # --- skew / work budget (maxComparisons analog, reference R:159,173) ---
     bucket_cap: int = 64        # max rows per (band, hash) bucket before action
     salt_factor: int = 8        # hot buckets split into this many sub-buckets
 
-    # --- physical ---
-    shuffle_partitions: int = 32
-    seed: int = 42
+    # --- physical: None = the session's spark.sql.shuffle.partitions ---
+    shuffle_partitions: int | None = None
 
     def __post_init__(self) -> None:
-        if self.bands * self.rows_per_band != self.n_perms:
-            raise ValueError(
-                f"bands*rows_per_band ({self.bands}*{self.rows_per_band}) "
-                f"must equal n_perms ({self.n_perms})"
-            )
-        if self.simhash_bits % self.simhash_bands != 0:
-            raise ValueError("simhash_bits must divide evenly into simhash_bands")
         # Pigeonhole recall guarantee: hamming_max errors spread over
-        # simhash_bands bands leave >=1 band untouched iff bands > hamming_max.
-        if self.simhash_bands <= self.hamming_max:
+        # SIMHASH_BANDS bands leave >=1 band untouched iff bands > hamming_max.
+        if SIMHASH_BANDS <= self.hamming_max:
             raise ValueError(
-                "simhash_bands must exceed hamming_max for exact multi-index recall"
+                f"hamming_max={self.hamming_max} must be below the "
+                f"{SIMHASH_BANDS} SimHash bands for exact multi-index recall"
             )
         # Analytic LSH recall budget (SURVEY.md §7.4.2): a pair at exactly
         # the verification threshold j collides on >=1 of b bands with
         # probability 1-(1-j^r)^b. The north_rule demands dup-pair recall
         # >= 0.99, so the banding scheme itself must clear that bar at the
         # configured threshold — checked here, not just asserted empirically.
-        # The rotated second banding needs >= 2 bands (to have a boundary to
-        # rotate across) and >= 2 rows per band (a half-band offset of 0
-        # would just duplicate the primary bands).
-        if self.refine_bands and (self.bands < 2 or self.rows_per_band < 2):
-            raise ValueError(
-                "refine_bands requires bands >= 2 and rows_per_band >= 2 "
-                f"(got bands={self.bands}, rows_per_band={self.rows_per_band})"
-            )
         if self.text_recall_at_threshold < 0.99:
             raise ValueError(
                 f"banded MinHash recall at jaccard_min={self.jaccard_min} is "
@@ -117,8 +71,9 @@ class DedupConfig:
             )
 
     @property
-    def simhash_band_bits(self) -> int:
-        return self.simhash_bits // self.simhash_bands
+    def n_perms(self) -> int:
+        """MinHash signature length: one row per band slot."""
+        return self.bands * self.rows_per_band
 
     @property
     def text_recall_at_threshold(self) -> float:
@@ -136,8 +91,12 @@ class DedupConfig:
         p = self.jaccard_min ** self.rows_per_band / self.salt_factor
         return 1.0 - (1.0 - p) ** self.bands
 
+    def partitions(self, spark) -> int:
+        """Shuffle width of the explicit repartitions: the configured count,
+        else the session's own spark.sql.shuffle.partitions."""
+        if self.shuffle_partitions is not None:
+            return self.shuffle_partitions
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
     def to_dict(self) -> dict:
         return asdict(self)
-
-
-CANONICAL = DedupConfig()

@@ -22,7 +22,17 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import types as T
 
-from relieff_lsh_spark.config import DedupConfig
+from relieff_lsh_spark.config import SEED, SIMHASH_BITS
+
+# Fingerprint shape: N_FREQ_BANDS linear bands on 0..FMAX_HZ (valid for every
+# sample rate >= 8 kHz) from FFT_WINDOW-sample Hann frames every FFT_HOP
+# samples, at most MAX_FFT_FRAMES evenly spaced frames per clip (the
+# mean-spectrum estimator; bounds FFT memory bandwidth).
+N_FREQ_BANDS = 64
+FMAX_HZ = 4000.0
+FFT_WINDOW = 1024
+FFT_HOP = 512
+MAX_FFT_FRAMES = 64
 
 
 def _wav_header(buf: bytes) -> tuple[int, int]:
@@ -96,20 +106,20 @@ def decode_pcm(
     return dec(buf)
 
 
-# (n_fft, sr_hz, n_freq_bands, fmax_hz) -> (hann window, band lo indices,
+# (n_fft, sr_hz) -> (hann window, band lo indices,
 # band hi indices, per-band 1/width, in-range band mask). All deterministic
 # functions of the key, so caching cannot change results; recomputing them
 # per clip was ~7% of the signature stage's CPU (round-4 profile).
 _FP_CONSTS: dict[tuple, tuple] = {}
 
 
-def _fp_constants(n_fft: int, sr_hz: int, cfg: DedupConfig) -> tuple:
-    key = (n_fft, sr_hz, cfg.n_freq_bands, cfg.fmax_hz)
+def _fp_constants(n_fft: int, sr_hz: int) -> tuple:
+    key = (n_fft, sr_hz)
     consts = _FP_CONSTS.get(key)
     if consts is None:
         win = np.hanning(n_fft).astype(np.float32)
         freqs = np.fft.rfftfreq(n_fft, 1.0 / sr_hz)
-        edges = np.linspace(0.0, cfg.fmax_hz, cfg.n_freq_bands + 1)
+        edges = np.linspace(0.0, FMAX_HZ, N_FREQ_BANDS + 1)
         idx = np.searchsorted(freqs, edges)
         los = idx[:-1].copy()
         his = np.maximum(idx[1:], los + 1)
@@ -129,16 +139,16 @@ def _fp_constants(n_fft: int, sr_hz: int, cfg: DedupConfig) -> tuple:
 _FFT_BLOCK = 32
 
 
-def spectral_fingerprint(x: np.ndarray, sr_hz: int, cfg: DedupConfig) -> np.ndarray:
+def spectral_fingerprint(x: np.ndarray, sr_hz: int) -> np.ndarray:
     """Noise-robust spectral fingerprint: mean power spectrum over Hann
-    frames, pooled into cfg.n_freq_bands linear bands on 0..fmax_hz, log,
+    frames, pooled into N_FREQ_BANDS linear bands on 0..FMAX_HZ, log,
     floor-clamped at (peak - 30 dB), mean-centered, L2-normalized.
 
     The -30 dB clamp makes the fingerprint invariant to broadband noise well
     below the signal (the SNR>=35dB `audio_near` perturbation), while
     heavily-noised clips legitimately diverge.
     """
-    n_fft, hop = cfg.fft_window, cfg.fft_hop
+    n_fft, hop = FFT_WINDOW, FFT_HOP
     if len(x) < n_fft:
         x = np.pad(x, (0, n_fft - len(x)))
     n_frames = 1 + (len(x) - n_fft) // hop
@@ -153,11 +163,11 @@ def spectral_fingerprint(x: np.ndarray, sr_hz: int, cfg: DedupConfig) -> np.ndar
     # float64, and uncapped frame matrices saturate memory bandwidth at
     # ~4 concurrent workers (measured: 16-proc pure-numpy throughput BELOW
     # 4-proc before the cap), destroying multi-core scaling.
-    if n_frames > cfg.max_fft_frames:
-        idx = np.linspace(0, n_frames - 1, cfg.max_fft_frames).astype(np.int64)
+    if n_frames > MAX_FFT_FRAMES:
+        idx = np.linspace(0, n_frames - 1, MAX_FFT_FRAMES).astype(np.int64)
         frames = frames[idx]
-        n_frames = cfg.max_fft_frames
-    win, los, his, valid = _fp_constants(n_fft, sr_hz, cfg)
+        n_frames = MAX_FFT_FRAMES
+    win, los, his, valid = _fp_constants(n_fft, sr_hz)
     # cache-blocked FFT (_FFT_BLOCK frames per iteration; see above), spectra
     # accumulated row-sequentially — the same left-to-right float addition
     # order as the ndarray.mean(axis=0) it replaced, so results match it
@@ -176,9 +186,9 @@ def spectral_fingerprint(x: np.ndarray, sr_hz: int, cfg: DedupConfig) -> np.ndar
     # pairwise summation), minus the per-band method-dispatch overhead that
     # was 44% of the fingerprint cost (round-4 profile; bit-identity
     # verified on realistic corpus clips before landing).
-    band = np.zeros(cfg.n_freq_bands, dtype=np.float64)
+    band = np.zeros(N_FREQ_BANDS, dtype=np.float64)
     add_reduce = np.add.reduce
-    for i in range(cfg.n_freq_bands):
+    for i in range(N_FREQ_BANDS):
         if valid[i]:
             lo, hi = los[i], his[i]
             band[i] = add_reduce(mean_spec[lo:hi]) / (hi - lo)
@@ -190,10 +200,10 @@ def spectral_fingerprint(x: np.ndarray, sr_hz: int, cfg: DedupConfig) -> np.ndar
     return logb / norm if norm > 0 else logb
 
 
-def simhash_planes(cfg: DedupConfig) -> np.ndarray:
-    """Seeded random hyperplanes (simhash_bits x n_freq_bands)."""
-    rng = np.random.default_rng(cfg.seed ^ 0x51AE_2222)
-    return rng.standard_normal((cfg.simhash_bits, cfg.n_freq_bands))
+def simhash_planes() -> np.ndarray:
+    """Seeded random hyperplanes (SIMHASH_BITS x N_FREQ_BANDS)."""
+    rng = np.random.default_rng(SEED ^ 0x51AE_2222)
+    return rng.standard_normal((SIMHASH_BITS, N_FREQ_BANDS))
 
 
 _BIT_WEIGHTS = np.left_shift(np.uint64(1), np.arange(64, dtype=np.uint64))
@@ -208,7 +218,7 @@ def simhash64(fp: np.ndarray, planes: np.ndarray) -> int:
     return int(val.astype(np.int64))
 
 
-def make_simhash_udf(cfg: DedupConfig, decoders: dict | None = None):
+def make_simhash_udf(decoders: dict | None = None):
     """Scalar arrow_udf (bytes, codec) -> simhash: the fused
     decode/fingerprint/SimHash path as a projection column, so the whole
     signature table is ONE narrow scan (no per-channel scans, no join to
@@ -229,7 +239,7 @@ def make_simhash_udf(cfg: DedupConfig, decoders: dict | None = None):
     """
     from pyspark.sql.functions import arrow_udf
 
-    planes = simhash_planes(cfg)
+    planes = simhash_planes()
 
     @arrow_udf(T.LongType())
     def simhash_sig(buf: pa.Array, codec: pa.Array) -> pa.Array:
@@ -245,7 +255,7 @@ def make_simhash_udf(cfg: DedupConfig, decoders: dict | None = None):
             except NotImplementedError:
                 out.append(None)  # quarantine: no decoder for this codec
                 continue
-            out.append(simhash64(spectral_fingerprint(x, sr, cfg), planes))
+            out.append(simhash64(spectral_fingerprint(x, sr), planes))
         return pa.array(out, type=pa.int64())
 
     return simhash_sig

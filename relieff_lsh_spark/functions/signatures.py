@@ -20,11 +20,16 @@ from relieff_lsh_spark.functions.text import (
     band_hashes_expr,
     make_minhash_udf,
     minimizer_keys_from,
-    rotated_band_hashes_expr,
     shingle_hashes_from_tokens,
     token_hashes_expr,
     tokens_expr,
 )
+
+# Substring channel: winnowing minimizers over SUBSTR_K-word shingles with a
+# SUBSTR_WINDOW-wide window; any shared verbatim span of
+# >= SUBSTR_K + SUBSTR_WINDOW - 1 words shares a minimizer key.
+SUBSTR_K = 4
+SUBSTR_WINDOW = 2
 
 
 def clip_signatures(
@@ -44,7 +49,7 @@ def clip_signatures(
     composition re-evaluates the hashing per window element (O(n^2)/row;
     measured 116s of a 165s stage)."""
     minhash_udf = make_minhash_udf(cfg)
-    simhash_udf = make_simhash_udf(cfg, decoders)
+    simhash_udf = make_simhash_udf(decoders)
     staged = corpus.select(
         "clip_id",
         "transcript",
@@ -62,15 +67,15 @@ def clip_signatures(
         F.array_distinct(
             shingle_hashes_from_tokens(F.col("th"), cfg.shingle_k)
         ).alias("shingles"),
-        shingle_hashes_from_tokens(F.col("th"), cfg.substr_k).alias("pos_sub"),
+        shingle_hashes_from_tokens(F.col("th"), SUBSTR_K).alias("pos_sub"),
     )
     df = df.withColumn("minhash", minhash_udf("shingles"))
     # past the second UDF boundary pos_sub is materialized — required by
     # the O(n) window references inside minimizer_keys_from
     df = df.withColumn(
-        "substr_keys", minimizer_keys_from(F.col("pos_sub"), cfg.substr_window)
+        "substr_keys", minimizer_keys_from(F.col("pos_sub"), SUBSTR_WINDOW)
     )
-    cols = [
+    return df.select(
         "clip_id",
         "transcript",
         "codec",
@@ -81,13 +86,4 @@ def clip_signatures(
         "minhash",
         band_hashes_expr(F.col("minhash"), cfg).alias("text_bands"),
         F.size("shingles").alias("n_shingles"),
-    ]
-    if cfg.refine_bands:
-        # fixed-width rotated-band hashes ((bands-1) x 8 B): banding
-        # explodes them and tier-1 verify credits them in the agreement
-        # count, without shipping the 1 KB minhash. Only emitted when the
-        # refine pass is on — downstream consumers key off the column's
-        # presence, so a placeholder would shadow their inline computation.
-        cols.insert(-1, rotated_band_hashes_expr(F.col("minhash"), cfg)
-                    .alias("text_bands_rot"))
-    return df.select(*cols)
+    )

@@ -19,7 +19,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from relieff_lsh_spark.config import DedupConfig
+from relieff_lsh_spark.config import SEED, DedupConfig
 
 _MERSENNE61 = (1 << 61) - 1
 
@@ -84,7 +84,7 @@ def minimizer_keys_from(hashes: Column, w: int) -> Column:
 
 def minhash_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     """Seeded universal-hash coefficients (a*h + b mod 2^61-1)."""
-    rng = np.random.default_rng(cfg.seed ^ 0x5EED_1111)
+    rng = np.random.default_rng(SEED ^ 0x5EED_1111)
     a = rng.integers(1, _MERSENNE61, cfg.n_perms, dtype=np.int64).astype(np.uint64)
     b = rng.integers(0, _MERSENNE61, cfg.n_perms, dtype=np.int64).astype(np.uint64)
     return a, b
@@ -143,33 +143,6 @@ def make_minhash_udf(cfg: DedupConfig):
         )
 
     return minhash
-
-
-def rotated_band_hashes_expr(sig: Column, cfg: DedupConfig) -> Column:
-    """array<bigint>[bands-1]: the refine pass's band hashes over
-    half-band-ROTATED boundaries (rotated band bnd covers signature rows
-    [bnd*r + r//2, bnd*r + r//2 + r)) — the analog of the reference's
-    refineGroupedGraph second pass (ReliefFFeatureSelector.scala:181-187).
-    Salted with bnd + cfg.bands so rotated hashes never collide with primary
-    band ids. This ONE expression is shared by the banding join
-    (operators/banding.py) and the tier-1 verify screen (operators/verify.py)
-    so a rotated-band collision is always worth one agreement at verify —
-    without that credit the prefilter would prune exactly the pairs the
-    refine pass exists to surface (round-3 ADVICE, medium)."""
-    r = cfg.rows_per_band
-    off = r // 2
-    n_rot = cfg.bands - 1  # offsets [off, off + n_rot*r) stay in range
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_rot - 1)),
-        lambda bnd: F.xxhash64(
-            F.concat_ws(
-                ",",
-                F.transform(F.slice(sig, bnd * r + off + 1, r),
-                            lambda v: v.cast("string")),
-            ),
-            bnd + cfg.bands,
-        ),
-    )
 
 
 def band_hashes_expr(sig: Column, cfg: DedupConfig) -> Column:

@@ -8,13 +8,15 @@ ReliefFFeatureSelector.scala:156-175, re-expressed as posexplode + groupBy
 keys per SURVEY.md §2.2 P4 / §2.3 J4).
 
 Channels:
-  text   — 32 banded-MinHash hashes per clip (b x r OR-construction)
-  audio  — simhash split into 4 x 16-bit chunks: pigeonhole-exact recall for
-           hamming <= 3 (any pair within 3 bits agrees on >= 1 chunk).
-           16-bit keys are coarse; random cross-clip collisions are bounded
-           by the bucket cap and discarded at verify — a cost knob, not a
-           correctness issue. At larger deployments raise simhash_bits /
-           bands via config.
+  text   — cfg.bands banded-MinHash hashes per clip (b x r OR-construction;
+           one banding, which alone clears the 0.99 recall budget at
+           jaccard_min — DedupConfig checks it)
+  audio  — simhash split into SIMHASH_BANDS x 16-bit chunks: pigeonhole-exact
+           recall for hamming <= 3 (any pair within 3 bits agrees on >= 1
+           chunk). 16-bit keys are coarse; random cross-clip collisions are
+           bounded by the bucket cap and discarded at verify — a cost, not a
+           correctness issue. Larger deployments would raise SIMHASH_BITS /
+           SIMHASH_BANDS (config.py).
   substr — winnowing minimizer keys (variable count per clip)
   exact  — xxhash64 of raw bytes (byte-identical clones; computed in a
            narrow projection so `bytes` never shuffles)
@@ -25,68 +27,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from relieff_lsh_spark.config import DedupConfig
-
-BAND_COLS = ["clip_id", "channel", "band_id", "band_hash"]
+from relieff_lsh_spark.config import SIMHASH_BANDS, SIMHASH_BITS
 
 
-def text_bands(text_sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+def text_bands(sigs: DataFrame) -> DataFrame:
     """Explode per-clip band-hash arrays; clips with no shingles are dropped
-    (they cannot pass Jaccard verification anyway).
-
-    With cfg.refine_bands, a second banding with half-band-rotated
-    boundaries is unioned in (band_id offset by cfg.bands) — the analog of
-    the reference's refineGroupedGraph second pass (R:181-187): pairs whose
-    agreeing MinHash rows straddle the primary band cuts get a second
-    chance to collide. Purely additive (extra OR-construction bands), so
-    recall can only increase."""
-    base = (
-        text_sigs.where(F.col("n_shingles") > 0)
+    (they cannot pass Jaccard verification anyway)."""
+    return (
+        sigs.where(F.col("n_shingles") > 0)
         .select("clip_id", F.posexplode("text_bands").alias("band_id", "band_hash"))
         .select("clip_id", F.lit("text").alias("channel"), "band_id", "band_hash")
     )
-    if not cfg.refine_bands:
-        return base
-    # The stored fixed-width column (clip_signatures emits it when refine is
-    # on) and the inline expression are the SAME hash (shared expr in
-    # functions/text.py), so verify's tier-1 agreement count sees exactly the
-    # hashes that produced the collision.
-    if "text_bands_rot" in text_sigs.columns:
-        rotated_hashes = F.col("text_bands_rot")
-    else:
-        from relieff_lsh_spark.functions.text import rotated_band_hashes_expr
-
-        rotated_hashes = rotated_band_hashes_expr(F.col("minhash"), cfg)
-    rotated = (
-        text_sigs.where(F.col("n_shingles") > 0)
-        .select("clip_id", F.posexplode(rotated_hashes).alias("rot_id", "band_hash"))
-        .select(
-            "clip_id",
-            F.lit("text").alias("channel"),
-            (F.col("rot_id") + cfg.bands).alias("band_id"),
-            "band_hash",
-        )
-    )
-    return base.unionByName(rotated)
 
 
-def substr_bands(text_sigs: DataFrame) -> DataFrame:
+def substr_bands(sigs: DataFrame) -> DataFrame:
     return (
-        text_sigs.select("clip_id", F.explode("substr_keys").alias("band_hash"))
+        sigs.select("clip_id", F.explode("substr_keys").alias("band_hash"))
         .select("clip_id", F.lit("substr").alias("channel"),
                 F.lit(0).alias("band_id"), "band_hash")
     )
 
 
-def audio_bands(audio_sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    bits = cfg.simhash_band_bits
+def audio_bands(sigs: DataFrame) -> DataFrame:
+    bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << bits) - 1
     chunks = F.array(*[
         F.shiftrightunsigned(F.col("simhash"), b * bits).bitwiseAND(F.lit(mask))
-        for b in range(cfg.simhash_bands)
+        for b in range(SIMHASH_BANDS)
     ])
     return (
-        audio_sigs.where(F.col("simhash").isNotNull())  # quarantined codecs
+        sigs.where(F.col("simhash").isNotNull())  # quarantined codecs
         .select("clip_id", F.posexplode(chunks).alias("band_id", "band_hash"))
         .select("clip_id", F.lit("audio").alias("channel"), "band_id", "band_hash")
     )
@@ -103,11 +73,12 @@ def exact_bands(corpus: DataFrame) -> DataFrame:
     )
 
 
-def all_bands(corpus: DataFrame, text_sigs: DataFrame, audio_sigs: DataFrame,
-              cfg: DedupConfig) -> DataFrame:
+def all_bands(corpus: DataFrame, sigs: DataFrame) -> DataFrame:
+    """Every channel's band rows: `sigs` is the clip_signatures table,
+    `corpus` feeds the exact channel."""
     return (
-        text_bands(text_sigs, cfg)
-        .unionByName(substr_bands(text_sigs))
-        .unionByName(audio_bands(audio_sigs, cfg))
+        text_bands(sigs)
+        .unionByName(substr_bands(sigs))
+        .unionByName(audio_bands(sigs))
         .unionByName(exact_bands(corpus))
     )

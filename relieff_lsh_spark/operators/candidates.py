@@ -57,11 +57,11 @@ class CandidateStats:
 
 
 def band_candidates(
-    bands: DataFrame, cfg: DedupConfig, shuffle_partitions: int | None = None
+    bands: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, CandidateStats]:
     """bands -> distinct candidate pairs (a, b, channels: array<string>)."""
     cap, factor = cfg.bucket_cap, cfg.salt_factor
-    n_part = shuffle_partitions or cfg.shuffle_partitions
+    n_part = cfg.partitions(bands.sparkSession)
 
     # explicit repartition by the signature-band key ahead of the self-join
     # (north_rule); the bucket-count window below reuses this exchange, so

@@ -64,14 +64,18 @@ from pyspark.sql import Window as W
 # 2k-diameter path, interleaved best-of-2) 41.4s -> 29.5s at local[8] and
 # 60.1s -> 51.6s at local[2], identical outputs and round count.
 #
-# Barrier depth, re-measured at the window-star HEAD
-# (BENCH/components_depth_probe.py, same synthetic shape, local[8]):
-# pairs_per_barrier 1 and 2 are equivalent within host noise (bests
-# 11.9-13.9s vs 14.1-14.3s across two interleaved sessions), 3-4 are
-# clearly WORSE (19.6s/28.8s — deeper lazy composition costs more in plan
-# depth/AQE materialization than the saved convergence-test actions). The knob
-# exists so the trade stays measurable; the default stays 2 (every
-# recorded scaling/bench artifact ran it, and 1 is not a demonstrated win).
+# Barrier depth, re-measured at the window-star version (same synthetic
+# shape, local[8]): 1 and 2 star pairs per barrier are equivalent within
+# host noise (bests 11.9-13.9s vs 14.1-14.3s across two interleaved
+# sessions), 3-4 are clearly WORSE (19.6s/28.8s — deeper lazy composition
+# costs more in plan depth/AQE materialization than the saved
+# convergence-test actions). It stays 2: every recorded scaling/bench
+# artifact ran it, and 1 is not a demonstrated win.
+PAIRS_PER_BARRIER = 2  # star (large+small) pairs composed lazily per
+# materialization barrier/convergence test; the fixpoint is latency-bound so
+# fewer barriers = less fixed cost, at the price of up to
+# PAIRS_PER_BARRIER-1 wasted (cheap, already-converged) rounds after the
+# true fixpoint
 
 
 @dataclass
@@ -167,11 +171,6 @@ def connected_components(
     # exhibit (the star fixpoint converges in ~8 rounds on the 92k-diameter
     # bench component) — the restart-protection/extra-write trade-off
     # round 2 effectively ran with
-    pairs_per_barrier: int = 2,  # star (large+small) pairs composed lazily
-    # per materialization barrier/convergence test; the fixpoint is
-    # latency-bound so fewer barriers = less fixed cost, at the price of up
-    # to pairs_per_barrier-1 wasted (cheap, already-converged) rounds after
-    # the true fixpoint
 ) -> ComponentsResult:
     """edges(a, b) undirected + vertices(clip_id) -> (clip_id, component_id)
     where component_id = min clip_id in the component. Singletons keep their
@@ -203,13 +202,13 @@ def connected_components(
     # advances `it` by 2 per pass, so a naive `it % checkpoint_every == 0`
     # with an odd cadence would only fire on multiples of 2*checkpoint_every
     while not converged and it < max_iters:
-        # pairs_per_barrier star rounds composed lazily per materialization
+        # PAIRS_PER_BARRIER star rounds composed lazily per materialization
         # barrier: the stage is latency-bound (per-job scheduling dwarfs the
         # per-round edge shuffle at dedup edge densities), so halving the
         # number of barriers/convergence tests halves its fixed cost.
-        it += pairs_per_barrier
+        it += PAIRS_PER_BARRIER
         ne = e
-        for _ in range(pairs_per_barrier):
+        for _ in range(PAIRS_PER_BARRIER):
             ne = _small_star(_large_star(ne))
         e = ne.localCheckpoint(eager=False)
         # the exact convergence test materializes the lazy checkpoint

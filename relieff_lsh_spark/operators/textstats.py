@@ -12,6 +12,7 @@ from relieff_lsh_spark.barrier import barrier
 from pyspark.sql import functions as F
 
 from relieff_lsh_spark.operators.dedup_docs import (
+    _TOKS,
     _sh_cte,
     shingle_hashes_expr,
     token_word_hashes,
@@ -112,7 +113,6 @@ def q_doc_fingerprint(docs: DataFrame) -> DataFrame:
     )
 
 
-_TOKS = "list_filter(string_split(text, ' '), t -> t <> '')"
 _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 
 SQL_TOKEN_STATS = f"""

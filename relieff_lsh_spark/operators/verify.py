@@ -17,17 +17,15 @@ Two-tier attach (the 100 TB shuffle-budget fix): the first signature join
 ships only FIXED-WIDTH columns — simhash (8 B) and the LSH band hashes
 (cfg.bands x 8 B) — and computes hamming plus the number of agreeing bands.
 Only pairs that could still pass some metric (hamming already passed,
-substr channel, or >= cfg.verify_prefilter_min_bands agreeing bands —
-counting BOTH primary and, with cfg.refine_bands, rotated band hashes, so
-refine-pass collisions keep their credit) join
-the unbounded-width shingle arrays for the exact Jaccard — so the dominant
+substr channel, or >= PREFILTER_MIN_BANDS agreeing text bands) join the
+unbounded-width shingle arrays for the exact Jaccard — so the dominant
 shuffle payload scales with the (small) survivor set, not the full
 candidate set. Every OUTPUT row still carries the exact Jaccard: the band
 count only prunes, never reports. (Design note: an earlier tier 1 shipped
 the full minhash signature, 128 x 8 B — a WORSE payload than typical
 shingle arrays and a weaker screen than the band count; see
-DedupConfig.verify_prefilter_min_bands for the miss-probability math and
-the measured regression that motivated the switch.)
+PREFILTER_MIN_BANDS below for the miss-probability math and the measured
+regression that motivated the switch.)
 
 Signatures are attached with shuffle equi-joins (the DataFrame form of the
 reference's BroadcastLookupProvider, R:124 — broadcast is impossible at
@@ -50,6 +48,21 @@ from relieff_lsh_spark.functions.distance import (
 
 VERIFIED_COLS = ["a", "b", "hamming", "jaccard", "substr_hit", "channels"]
 
+# Tier-1 prefilter: candidate pairs only join their (unbounded-width)
+# shingle arrays for exact-Jaccard verification when at least this many of
+# the text bands (cfg.bands x 8 B, already in the signature) agree — or the
+# pair can pass via another channel. One agreeing band is what MADE it a
+# candidate, so requiring a second is the cheapest possible "can this pass
+# Jaccard?" screen: at jaccard_min=0.8 a true pair misses with probability
+# P(Binom(bands, j^r) <= PREFILTER_MIN_BANDS - 1) ~ 1.7e-6; a spurious
+# collision (j <= 0.5) has p_band = j^r <= 0.0625 and is pruned with
+# probability >= 0.86 before the shingle arrays ever move. The first design
+# used the full minhash signature (128 x 8 B) as the tier-1 payload —
+# measured 2.3x verify-stage wall vs the band columns on the n=640k bench,
+# since 1 KB/side exceeds typical shingle arrays; the band count is both
+# smaller (256 B) and a TIGHTER screen.
+PREFILTER_MIN_BANDS = 2
+
 
 def verify_candidates(
     cand: DataFrame, signatures: DataFrame, cfg: DedupConfig
@@ -61,33 +74,17 @@ def verify_candidates(
     channel — containment is meaningless for band-collision pairs and the
     string compare is the most expensive metric.
     """
-    # Tier 1: fixed-width signature attach (simhash + band hashes). Shingle
-    # arrays and transcripts do NOT ride this join. When the refine pass is
-    # on, the rotated band hashes (text_bands_rot, (bands-1) x 8 B) ride too
-    # and count toward the agreement — a pair whose ONLY collision is a
-    # rotated band starts from 1 agreement like any primary-collision pair,
-    # instead of being pruned with certainty (round-3 ADVICE, medium: the
-    # primary-only count nullified the refine pass's recall contribution for
-    # exactly its target population).
-    has_rot = "text_bands_rot" in signatures.columns
-    all_bands_col = (
-        F.concat(F.col("text_bands"), F.col("text_bands_rot"))
-        if has_rot
-        else F.col("text_bands")
-    )
-    n_bands_cols = cfg.bands + (cfg.bands - 1 if has_rot else 0)
-    fixed = signatures.select(
-        "clip_id", "simhash", all_bands_col.alias("all_bands")
-    )
-    fx_a = fixed.select(
+    # Tier 1: fixed-width signature attach (simhash + text band hashes).
+    # Shingle arrays and transcripts do NOT ride this join.
+    fx_a = signatures.select(
         F.col("clip_id").alias("a"),
         F.col("simhash").alias("simhash_a"),
-        F.col("all_bands").alias("tb_a"),
+        F.col("text_bands").alias("tb_a"),
     )
-    fx_b = fixed.select(
+    fx_b = signatures.select(
         F.col("clip_id").alias("b"),
         F.col("simhash").alias("simhash_b"),
-        F.col("all_bands").alias("tb_b"),
+        F.col("text_bands").alias("tb_b"),
     )
     scored = (
         cand.join(fx_a, "a").join(fx_b, "b")
@@ -98,7 +95,7 @@ def verify_candidates(
             # is CodegenFallback — round-6, functions/distance.py);
             # NULL-safe: a missing signature must not prune (keep)
             F.coalesce(
-                minhash_agree_n(F.col("tb_a"), F.col("tb_b"), n_bands_cols),
+                minhash_agree_n(F.col("tb_a"), F.col("tb_b"), cfg.bands),
                 F.lit(cfg.bands),
             ),
         )
@@ -107,7 +104,7 @@ def verify_candidates(
     could_pass = (
         F.coalesce(F.col("hamming") <= cfg.hamming_max, F.lit(False))
         | is_substr_cand
-        | (F.col("bands_agree") >= F.lit(cfg.verify_prefilter_min_bands))
+        | (F.col("bands_agree") >= F.lit(PREFILTER_MIN_BANDS))
     )
     kept = scored.where(could_pass).drop("tb_a", "tb_b", "bands_agree")
 

@@ -38,8 +38,6 @@ from relieff_lsh_spark.operators.components import connected_components
 from relieff_lsh_spark.operators.verify import verify_candidates
 from relieff_lsh_spark.sources.catalog import SnapshotCatalog
 
-STAGES = ("signatures", "candidates", "verified", "components")
-
 
 def _session_cpu_seconds() -> float:
     """Cumulative usr+sys CPU of every live process in this session (the
@@ -94,7 +92,7 @@ class DedupPipeline:
 
     def stage_candidates(self, sigs: DataFrame) -> tuple[DataFrame, dict]:
         corpus = self.corpus()
-        bands = all_bands(corpus, sigs, sigs, self.cfg)
+        bands = all_bands(corpus, sigs)
         cand, stats = band_candidates(bands, self.cfg)
         return cand, {
             "dropped_buckets": stats.dropped_buckets,

@@ -42,7 +42,7 @@ def jaccard(a: frozenset, b: frozenset) -> float:
     return inter / union if union else 0.0
 
 
-def contains_verbatim(needle: str, haystack: str) -> bool:
+def verbatim_in(needle: str, haystack: str) -> bool:
     n, h = needle.strip(), haystack.strip()
     return bool(n) and (f" {n} " in f" {h} ")
 
@@ -86,11 +86,11 @@ def brute_oracle(corpus_pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
     ids = corpus_pdf["clip_id"].tolist()
     n = len(ids)
 
-    planes = simhash_planes(cfg)
+    planes = simhash_planes()
     sims = np.empty(n, dtype=np.uint64)
     for i, (buf, codec) in enumerate(zip(corpus_pdf["bytes"], corpus_pdf["codec"])):
         x, sr = decode_pcm(bytes(buf), codec)
-        sims[i] = np.uint64(np.int64(simhash64(spectral_fingerprint(x, sr, cfg), planes)))
+        sims[i] = np.uint64(np.int64(simhash64(spectral_fingerprint(x, sr), planes)))
 
     shingles = [shingle_set(t, cfg.shingle_k) for t in corpus_pdf["transcript"]]
     texts = [t.strip() for t in corpus_pdf["transcript"]]
@@ -107,7 +107,7 @@ def brute_oracle(corpus_pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
                 continue
             if jaccard(si, shingles[j]) >= cfg.jaccard_min:
                 uf.union(ids[i], ids[j])
-            elif contains_verbatim(ti, texts[j]) or contains_verbatim(texts[j], ti):
+            elif verbatim_in(ti, texts[j]) or verbatim_in(texts[j], ti):
                 uf.union(ids[i], ids[j])
     return pd.DataFrame(
         {"clip_id": ids, "component_id": [uf.find(c) for c in ids]}

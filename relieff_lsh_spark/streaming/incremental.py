@@ -242,7 +242,7 @@ class IncrementalDedup:
         if part is not None:
             # explicit count: AQE may not coalesce it, so a small batch's
             # buckets are still written by parallel tasks, never by one
-            df = df.repartition(self.cfg.shuffle_partitions, part)
+            df = df.repartition(self.cfg.partitions(self.spark), part)
         rows = Observation()
         w = df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
         if part is not None:
@@ -411,7 +411,7 @@ class IncrementalDedup:
             # an empty batch leaves no state behind
             shutil.rmtree(self._batch_dir("signatures", batch_id), ignore_errors=True)
             return
-        new_bands = all_bands(batch, new_sigs, new_sigs, self.cfg).withColumn(
+        new_bands = all_bands(batch, new_sigs).withColumn(
             "bucket", F.pmod(F.xxhash64("band_hash"), F.lit(BUCKETS))
         ).localCheckpoint(eager=False)
         self._write_batch("bands", new_bands, batch_id)

@@ -8,6 +8,7 @@ import pytest
 
 from relieff_lsh_spark.config import DedupConfig
 from relieff_lsh_spark.functions.audio import (
+    N_FREQ_BANDS,
     decode_pcm,
     simhash64,
     simhash_planes,
@@ -84,8 +85,8 @@ def test_decode_all_uncompressed_pcm_codecs(cfg):
     buf16 = _clip([440.0, 880.0, 1760.0])
     ref, sr = decode_wav(buf16)
     pcm16 = (ref * 32768.0).astype(np.int16)
-    planes = simhash_planes(cfg)
-    h_ref = simhash64(spectral_fingerprint(ref, sr, cfg), planes)
+    planes = simhash_planes()
+    h_ref = simhash64(spectral_fingerprint(ref, sr), planes)
     for codec in ("pcm_u8", "pcm_s24le", "pcm_f32le"):
         buf = _wav_bytes_codec(pcm16, sr, codec)
         x, sr2 = decode_pcm(buf, codec)
@@ -98,38 +99,38 @@ def test_decode_all_uncompressed_pcm_codecs(cfg):
                 float(np.sum(ref**2)) / max(float(np.sum(err**2)), 1e-20)
             )
             assert snr >= 30.0, (codec, snr)
-        h = simhash64(spectral_fingerprint(x, sr2, cfg), planes)
+        h = simhash64(spectral_fingerprint(x, sr2), planes)
         assert _ham(h, h_ref) <= cfg.hamming_max, codec
 
 
 def test_fingerprint_noise_robust(cfg):
     """audio_near contract: same signal + SNR-35dB noise -> hamming <= 3."""
-    planes = simhash_planes(cfg)
+    planes = simhash_planes()
     base = _clip([300.0, 1200.0, 2500.0], noise_seed=10)
     noisy = _clip([300.0, 1200.0, 2500.0], noise_seed=99, extra_db=35.0)
-    h1 = simhash64(spectral_fingerprint(decode_pcm(base, "pcm_s16le")[0], 16000, cfg), planes)
-    h2 = simhash64(spectral_fingerprint(decode_pcm(noisy, "pcm_s16le")[0], 16000, cfg), planes)
+    h1 = simhash64(spectral_fingerprint(decode_pcm(base, "pcm_s16le")[0], 16000), planes)
+    h2 = simhash64(spectral_fingerprint(decode_pcm(noisy, "pcm_s16le")[0], 16000), planes)
     assert _ham(h1, h2) <= cfg.hamming_max
 
 
 def test_fingerprint_discriminates(cfg):
-    planes = simhash_planes(cfg)
+    planes = simhash_planes()
     rng = np.random.default_rng(5)
     hashes = []
     for _ in range(12):
         freqs = rng.uniform(100, 3700, rng.integers(2, 5))
         buf = _clip(freqs, noise_seed=int(rng.integers(1 << 30)))
         x, sr = decode_pcm(buf, "pcm_s16le")
-        hashes.append(simhash64(spectral_fingerprint(x, sr, cfg), planes))
+        hashes.append(simhash64(spectral_fingerprint(x, sr), planes))
     dists = [_ham(hashes[i], hashes[j])
              for i in range(len(hashes)) for j in range(i + 1, len(hashes))]
     assert min(dists) > cfg.hamming_max, f"unrelated clips too close: {min(dists)}"
 
 
-def test_short_clip_padded(cfg):
-    x = np.zeros(100, dtype=np.float32)  # shorter than fft_window
-    fp = spectral_fingerprint(x, 8000, cfg)
-    assert fp.shape == (cfg.n_freq_bands,)
+def test_short_clip_padded():
+    x = np.zeros(100, dtype=np.float32)  # shorter than FFT_WINDOW
+    fp = spectral_fingerprint(x, 8000)
+    assert fp.shape == (N_FREQ_BANDS,)
     assert np.all(np.isfinite(fp))
 
 
@@ -180,12 +181,12 @@ def test_audio_signatures_spark_matches_local(spark, cfg, tiny_corpus_dir):
     corpus = spark.read.parquet(f"{tiny_corpus_dir}/corpus.parquet").limit(20)
     rows = clip_signatures(corpus, cfg).select("clip_id", "simhash").collect()
     pdf = corpus.select("clip_id", "bytes", "codec").toPandas().set_index("clip_id")
-    planes = simhash_planes(cfg)
+    planes = simhash_planes()
     assert len(rows) == 20
     for r in rows:
         buf = bytes(pdf.loc[r["clip_id"], "bytes"])
         x, sr = decode_pcm(buf, pdf.loc[r["clip_id"], "codec"])
-        expect = simhash64(spectral_fingerprint(x, sr, cfg), planes)
+        expect = simhash64(spectral_fingerprint(x, sr), planes)
         assert r["simhash"] == expect
 
 
@@ -285,11 +286,11 @@ def test_simhash_arrow_udf_quarantines_null_and_unknown(cfg):
     from relieff_lsh_spark.functions.audio import make_simhash_udf, simhash_planes
 
     buf = _clip([440.0])
-    planes = simhash_planes(cfg)
+    planes = simhash_planes()
     x, sr = decode_pcm(buf, "pcm_s16le")
-    want = simhash64(spectral_fingerprint(x, sr, cfg), planes)
+    want = simhash64(spectral_fingerprint(x, sr), planes)
 
-    kernel = make_simhash_udf(cfg).func
+    kernel = make_simhash_udf().func
     bufs = pa.array([buf, None, buf, buf], type=pa.binary())
     codecs = pa.array(["pcm_s16le", "pcm_s16le", None, "opus"], type=pa.string())
     assert kernel(bufs, codecs).to_pylist() == [want, None, None, None]

@@ -82,3 +82,32 @@ def test_documents_hot_band_capped(spark):
     assert (200, 201) in pairs                      # cold-bucket recall intact
     assert not any(a < 150 and b < 150 for a, b in pairs)  # hot bucket dropped
     assert len(pairs) < 100                          # nowhere near C(150,2)=11175
+
+
+def test_default_config_plans_session_partitions(spark):
+    """DedupConfig() leaves the band repartition to the session's
+    spark.sql.shuffle.partitions: the stats collect that materializes the
+    repartitioned band relation runs a stage of exactly that many tasks."""
+    sc = spark.sparkContext
+    rows = [(f"c{i}", "text", i % 2, 5) for i in range(6)]
+    # one input partition, so no stage's task count depends on the host
+    bands = _bands_df(spark, sc.parallelize(rows, 1))
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    group = "test_default_config_plans_session_partitions"
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    sc.setJobGroup(group, "band_candidates under DedupConfig()")
+    try:
+        cand, stats = band_candidates(bands, DedupConfig())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert stats.rows_in == 6
+    tracker = sc.statusTracker()
+    tasks = {
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    }
+    assert 3 in tasks and 32 not in tasks, tasks
+    assert len(cand.collect()) == 2 * 3  # C(3,2) pairs in each of 2 buckets

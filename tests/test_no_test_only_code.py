@@ -1,11 +1,13 @@
-"""Every top-level function and class in relieff_lsh_spark/functions/ and
-relieff_lsh_spark/operators/ must be referenced from non-test code.
+"""Every top-level function, class and module-level assignment in the
+relieff_lsh_spark package must be referenced from non-test code.
 
 A second implementation that only tests call checks itself, not the product
-path. This scan is static (AST only, no Spark): a name counts as referenced
-when some non-test module uses it as a name, an attribute, an imported name,
-or an exact string constant (queries looked up by name). Because matching
-is by bare name, no name may be defined in two scanned modules."""
+path, and a constant nothing reads is a dead knob. This scan is static (AST
+only, no Spark): a name counts as referenced when some non-test module
+(the package, jobs/, hostbench/, BENCH/ and the entry scripts) reads it as a
+name, uses it as an attribute or an imported name, or spells it as an exact
+string constant (queries looked up by name). Dunders are exempt. Because
+matching is by bare name, no name may be defined in two package modules."""
 
 from __future__ import annotations
 
@@ -13,14 +15,17 @@ import ast
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-SCANNED = ["relieff_lsh_spark/functions", "relieff_lsh_spark/operators"]
-NON_TEST = ["relieff_lsh_spark", "jobs", "hostbench", "__spark_entry__.py", "bench.py"]
+SCANNED = "relieff_lsh_spark"
+NON_TEST = ["relieff_lsh_spark", "jobs", "hostbench", "BENCH", "__spark_entry__.py",
+            "bench.py"]
 
 # Names kept on purpose although only tests reference them.
 ALLOWED = {
     "_cos_hof": "bit-exact spec the Arrow cosine kernel is pinned against",
     "pair_recall": "metric helper the ANN recall tests compute with",
     "capped_pairs_stats": "drop counter the skew-cap tests read",
+    "decode_wav": "reference decoder the corpus and audio tests compare against",
+    "brute_oracle": "exact oracle the pipeline recall tests compare against",
 }
 
 
@@ -39,7 +44,7 @@ def _non_test_files() -> list[Path]:
 def _references(tree: ast.AST) -> set[str]:
     refs: set[str] = set()
     for node in ast.walk(tree):
-        if isinstance(node, ast.Name):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
             refs.add(node.id)
         elif isinstance(node, ast.Attribute):
             refs.add(node.attr)
@@ -50,15 +55,26 @@ def _references(tree: ast.AST) -> set[str]:
     return refs
 
 
+def _defined_names(node: ast.stmt) -> list[str]:
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    targets = (
+        node.targets if isinstance(node, ast.Assign)
+        else [node.target] if isinstance(node, (ast.AnnAssign, ast.AugAssign))
+        else []
+    )
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
 def _definitions() -> dict[str, list[str]]:
     defs: dict[str, list[str]] = {}
-    for d in SCANNED:
-        for f in sorted((ROOT / d).glob("*.py")):
-            for node in ast.parse(f.read_text()).body:
-                if isinstance(
-                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-                ):
-                    defs.setdefault(node.name, []).append(str(f.relative_to(ROOT)))
+    for f in sorted((ROOT / SCANNED).rglob("*.py")):
+        where = str(f.relative_to(ROOT))
+        for node in ast.parse(f.read_text()).body:
+            for name in _defined_names(node):
+                if not (name.startswith("__") and name.endswith("__")):
+                    if where not in defs.setdefault(name, []):
+                        defs[name].append(where)
     return defs
 
 
@@ -73,13 +89,14 @@ def test_no_test_only_functions_or_classes():
         if name not in refs and name not in ALLOWED
     }
     assert not unused, (
-        "defined in the package but referenced only from tests (delete it, "
+        "defined in the package but referenced only from tests or nowhere "
+        "(delete it, "
         f"or point the tests at the product path): {unused}"
     )
     # references are matched by bare name, so a name defined twice would
     # let a test-only copy hide behind the used one
     shared = {name: where for name, where in defs.items() if len(where) > 1}
-    assert not shared, f"defined in more than one scanned module: {shared}"
+    assert not shared, f"defined in more than one package module: {shared}"
 
 
 def test_allowlist_entries_still_exist():

@@ -95,27 +95,6 @@ def test_band_hash_band_index_salted(spark, cfg):
     assert len(set(row["b"])) == cfg.bands
 
 
-def test_refine_rotated_bands_additive(spark, tiny_corpus_dir):
-    """L4 refine analog: rotated-boundary banding adds bands (recall can
-    only increase) and never perturbs the primary band set."""
-    from relieff_lsh_spark.config import DedupConfig
-    from relieff_lsh_spark.functions.signatures import clip_signatures
-    from relieff_lsh_spark.operators.banding import text_bands
-
-    corpus = spark.read.parquet(f"{tiny_corpus_dir}/corpus.parquet").limit(50)
-    base_cfg = DedupConfig(shuffle_partitions=8)
-    ref_cfg = DedupConfig(shuffle_partitions=8, refine_bands=True)
-    sigs = clip_signatures(corpus, base_cfg).localCheckpoint()
-
-    base = text_bands(sigs, base_cfg)
-    refined = text_bands(sigs, ref_cfg)
-    n_base, n_ref = base.count(), refined.count()
-    # primary 32 bands + 31 rotated bands per clip with shingles
-    assert n_ref > n_base
-    assert refined.where("band_id < 32").count() == n_base
-    assert refined.where("band_id >= 32").count() == n_ref - n_base
-
-
 def test_text_components_clusters_planted_clones(spark):
     """q_text_components groups every planted near-dup clone with its base
     doc (component_id = min member id), and q_component_sizes reports the
