@@ -1,12 +1,11 @@
 """Fused per-clip signature projection: ONE narrow scan of the corpus
 producing every channel's signature columns, no join.
 
-The original design computed text and audio signatures as separate scans
-merged with a shuffle join on clip_id; diagnosing the scaling bench showed
-that stage spending most of its wall clock outside the actual signature
-math (extra corpus scans, the join exchange, and socket traffic for a
-second UDF pass). One projection = one scan, `bytes` consumed by the
-scalar SimHash UDF at the source and never shuffled (SURVEY.md §4 O10).
+The only reader of the corpus: every later stage works on this ~1 KB/clip
+table of hashes. `bytes` is consumed at the scan by the SimHash UDF and the
+exact channel's digests, and never shuffled (SURVEY.md §4 O10). Separate
+text/audio scans joined on clip_id, and a second scan for the exact
+channel, were extra corpus passes outside the signature math.
 """
 
 from __future__ import annotations
@@ -35,9 +34,14 @@ SUBSTR_WINDOW = 2
 def clip_signatures(
     corpus: DataFrame, cfg: DedupConfig, decoders: dict | None = None
 ) -> DataFrame:
-    """corpus -> (clip_id, transcript, shingles, substr_keys, simhash,
-    minhash, text_bands, n_shingles). Narrow; bytes dies at the scan.
-    `decoders` overrides the audio codec registry (functions/audio.py).
+    """corpus -> (clip_id, transcript, codec, shingles, substr_keys,
+    simhash, text_bands, exact_hash, exact_murmur). Narrow; bytes dies at
+    the scan. `decoders` overrides the audio codec registry
+    (functions/audio.py). The MinHash signature only feeds `text_bands`.
+
+    The exact channel bands on `exact_hash` = xxhash64(bytes); verify also
+    needs `exact_murmur` = murmur3 hash(bytes) to match: 96 bits, ~6e-6
+    false pairs at 10^12 clips (64 bits: ~2.7e4). NULL bytes, NULL digests.
 
     Tokens are hashed ONCE (xxhash64 per token) in the simhash-UDF stage;
     both k-gram widths (minhash shingles, substring grams) then derive as
@@ -56,6 +60,8 @@ def clip_signatures(
         "codec",
         token_hashes_expr(tokens_expr("transcript")).alias("th"),
         simhash_udf("bytes", "codec").alias("simhash"),
+        F.when(F.col("bytes").isNotNull(), F.xxhash64("bytes")).alias("exact_hash"),
+        F.when(F.col("bytes").isNotNull(), F.hash("bytes")).alias("exact_murmur"),
     )
     # `th` is an attribute here (the python-UDF stage above is a physical
     # boundary), so the k references per position stay O(1) reads
@@ -64,6 +70,8 @@ def clip_signatures(
         "transcript",
         "codec",
         "simhash",
+        "exact_hash",
+        "exact_murmur",
         F.array_distinct(
             shingle_hashes_from_tokens(F.col("th"), cfg.shingle_k)
         ).alias("shingles"),
@@ -83,7 +91,7 @@ def clip_signatures(
         "substr_keys",
         "simhash",  # NULL = codec quarantined (no decoder); the clip still
         #             dedups via exact/text/substr channels
-        "minhash",
         band_hashes_expr(F.col("minhash"), cfg).alias("text_bands"),
-        F.size("shingles").alias("n_shingles"),
+        "exact_hash",
+        "exact_murmur",
     )

@@ -5,7 +5,8 @@
 so a single capped/salted equi-join generates candidates for all channels
 (the reference's multi-table LSH bucketing, call sites reference
 ReliefFFeatureSelector.scala:156-175, re-expressed as posexplode + groupBy
-keys per SURVEY.md §2.2 P4 / §2.3 J4).
+keys per SURVEY.md §2.2 P4 / §2.3 J4). Every channel reads the
+clip_signatures table only; nothing here touches the corpus.
 
 Channels:
   text   — cfg.bands banded-MinHash hashes per clip (b x r OR-construction;
@@ -18,8 +19,8 @@ Channels:
            correctness issue. Larger deployments would raise SIMHASH_BITS /
            SIMHASH_BANDS (config.py).
   substr — winnowing minimizer keys (variable count per clip)
-  exact  — xxhash64 of raw bytes (byte-identical clones; computed in a
-           narrow projection so `bytes` never shuffles)
+  exact  — `exact_hash` = xxhash64(bytes) from the signature scan (byte-
+           identical clones); a clip with NULL bytes emits no exact row
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ def text_bands(sigs: DataFrame) -> DataFrame:
     """Explode per-clip band-hash arrays; clips with no shingles are dropped
     (they cannot pass Jaccard verification anyway)."""
     return (
-        sigs.where(F.col("n_shingles") > 0)
+        sigs.where(F.size("shingles") > 0)
         .select("clip_id", F.posexplode("text_bands").alias("band_id", "band_hash"))
         .select("clip_id", F.lit("text").alias("channel"), "band_id", "band_hash")
     )
@@ -62,23 +63,21 @@ def audio_bands(sigs: DataFrame) -> DataFrame:
     )
 
 
-def exact_bands(corpus: DataFrame) -> DataFrame:
-    """Byte-identity channel. Narrow projection: hashes bytes at the scan,
-    ships only (clip_id, hash)."""
-    return corpus.select(
+def exact_bands(sigs: DataFrame) -> DataFrame:
+    """Byte-identity channel: one row per clip keyed on its bytes digest."""
+    return sigs.where(F.col("exact_hash").isNotNull()).select(
         "clip_id",
         F.lit("exact").alias("channel"),
         F.lit(0).alias("band_id"),
-        F.xxhash64("bytes").alias("band_hash"),
+        F.col("exact_hash").alias("band_hash"),
     )
 
 
-def all_bands(corpus: DataFrame, sigs: DataFrame) -> DataFrame:
-    """Every channel's band rows: `sigs` is the clip_signatures table,
-    `corpus` feeds the exact channel."""
+def all_bands(sigs: DataFrame) -> DataFrame:
+    """Every channel's band rows from the clip_signatures table."""
     return (
         text_bands(sigs)
         .unionByName(substr_bands(sigs))
         .unionByName(audio_bands(sigs))
-        .unionByName(exact_bands(corpus))
+        .unionByName(exact_bands(sigs))
     )

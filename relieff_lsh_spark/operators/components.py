@@ -132,14 +132,13 @@ def _is_star_forest(e: DataFrame) -> bool:
     neighborhood, each child's only neighbor is its root), and both preserve
     connectivity, so a star forest IS the fixpoint, rooted at each
     component's minimum id. One grouped aggregate over the edge state
-    answers both conditions per node; the empty state passes."""
-    nodes = e.select(
-        F.col("u").alias("x"), F.lit(1).alias("child"), F.lit(False).alias("parent")
-    ).unionByName(
-        e.select(
-            F.col("v").alias("x"), F.lit(0).alias("child"), F.lit(True).alias("parent")
-        )
-    )
+    answers both conditions per node; the empty state passes. Both roles of
+    an edge come from ONE scan of `e`: over a lazy checkpoint a second scan
+    would block on the lock of the block the first one is storing."""
+    nodes = e.select(F.inline(F.array(
+        F.struct(F.col("u").alias("x"), F.lit(1).alias("child"), F.lit(False).alias("parent")),
+        F.struct(F.col("v").alias("x"), F.lit(0).alias("child"), F.lit(True).alias("parent")),
+    )))
     per_node = nodes.groupBy("x").agg(
         F.sum("child").alias("n_parents"), F.bool_or("parent").alias("is_parent")
     )

@@ -10,22 +10,22 @@ metrics, all JVM-side expressions (SURVEY.md §2.6 F1):
              over distinct shingle-hash sets — not the MinHash estimate, so
              verification thresholds match the brute-force oracle exactly)
   substr   = word-boundary verbatim containment        (substring channel)
+  exact    = both bytes digests equal                   (byte identity:
+             xxhash64 + murmur3, 96 bits — functions/signatures.py)
 
-A pair is a duplicate if ANY metric passes its configured threshold.
+A pair is a duplicate if ANY metric passes its configured threshold (a
+byte-identical pair passes on `exact_hit` alone).
 
 Two-tier attach (the 100 TB shuffle-budget fix): the first signature join
-ships only FIXED-WIDTH columns — simhash (8 B) and the LSH band hashes
-(cfg.bands x 8 B) — and computes hamming plus the number of agreeing bands.
-Only pairs that could still pass some metric (hamming already passed,
+ships only FIXED-WIDTH columns — simhash (8 B), the two bytes digests
+(12 B) and the LSH band hashes (cfg.bands x 8 B) — and computes hamming,
+the byte-identity test and the number of agreeing bands. Only pairs that
+could still pass some metric (hamming or byte identity already passed,
 substr channel, or >= PREFILTER_MIN_BANDS agreeing text bands) join the
 unbounded-width shingle arrays for the exact Jaccard — so the dominant
 shuffle payload scales with the (small) survivor set, not the full
 candidate set. Every OUTPUT row still carries the exact Jaccard: the band
-count only prunes, never reports. (Design note: an earlier tier 1 shipped
-the full minhash signature, 128 x 8 B — a WORSE payload than typical
-shingle arrays and a weaker screen than the band count; see
-PREFILTER_MIN_BANDS below for the miss-probability math and the measured
-regression that motivated the switch.)
+count only prunes, never reports (PREFILTER_MIN_BANDS below).
 
 Signatures are attached with shuffle equi-joins (the DataFrame form of the
 reference's BroadcastLookupProvider, R:124 — broadcast is impossible at
@@ -46,7 +46,7 @@ from relieff_lsh_spark.functions.distance import (
     substr_either,
 )
 
-VERIFIED_COLS = ["a", "b", "hamming", "jaccard", "substr_hit", "channels"]
+VERIFIED_COLS = ["a", "b", "hamming", "jaccard", "substr_hit", "channels", "exact_hit"]
 
 # Tier-1 prefilter: candidate pairs only join their (unbounded-width)
 # shingle arrays for exact-Jaccard verification when at least this many of
@@ -67,35 +67,41 @@ PREFILTER_MIN_BANDS = 2
 def verify_candidates(
     cand: DataFrame, signatures: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
-    """cand(a, b, channels) x signatures(clip_id, simhash, text_bands,
-    shingles, transcript) -> verified pairs with metrics.
+    """cand(a, b, channels) x signatures(clip_id, simhash, exact_hash,
+    exact_murmur, text_bands, shingles, transcript) -> verified pairs with
+    metrics.
 
     Transcripts are only compared for pairs that arrived via the substr
     channel — containment is meaningless for band-collision pairs and the
     string compare is the most expensive metric.
     """
-    # Tier 1: fixed-width signature attach (simhash + text band hashes).
-    # Shingle arrays and transcripts do NOT ride this join.
-    fx_a = signatures.select(
-        F.col("clip_id").alias("a"),
-        F.col("simhash").alias("simhash_a"),
-        F.col("text_bands").alias("tb_a"),
-    )
-    fx_b = signatures.select(
-        F.col("clip_id").alias("b"),
-        F.col("simhash").alias("simhash_b"),
-        F.col("text_bands").alias("tb_b"),
-    )
+    # Tier 1: fixed-width signature attach (simhash, bytes digests, text
+    # band hashes). Shingle arrays and transcripts do NOT ride this join.
+    fixed = ["simhash", "exact_hash", "exact_murmur", "text_bands"]
+
+    def side(s: str) -> DataFrame:
+        return signatures.select(
+            F.col("clip_id").alias(s), *[F.col(c).alias(f"{c}_{s}") for c in fixed]
+        )
+
     scored = (
-        cand.join(fx_a, "a").join(fx_b, "b")
+        cand.join(side("a"), "a").join(side("b"), "b")
         .withColumn("hamming", hamming64(F.col("simhash_a"), F.col("simhash_b")))
+        .withColumn(  # NULL digests (NULL bytes) never match
+            "exact_hit",
+            F.coalesce(
+                (F.col("exact_hash_a") == F.col("exact_hash_b"))
+                & (F.col("exact_murmur_a") == F.col("exact_murmur_b")),
+                F.lit(False),
+            ),
+        )
         .withColumn(
             "bands_agree",
             # unrolled fixed-width agreement count (codegen; the HOF fold
             # is CodegenFallback — round-6, functions/distance.py);
             # NULL-safe: a missing signature must not prune (keep)
             F.coalesce(
-                minhash_agree_n(F.col("tb_a"), F.col("tb_b"), cfg.bands),
+                minhash_agree_n(F.col("text_bands_a"), F.col("text_bands_b"), cfg.bands),
                 F.lit(cfg.bands),
             ),
         )
@@ -103,10 +109,11 @@ def verify_candidates(
     is_substr_cand = F.array_contains(F.col("channels"), F.lit("substr"))
     could_pass = (
         F.coalesce(F.col("hamming") <= cfg.hamming_max, F.lit(False))
+        | F.col("exact_hit")
         | is_substr_cand
         | (F.col("bands_agree") >= F.lit(PREFILTER_MIN_BANDS))
     )
-    kept = scored.where(could_pass).drop("tb_a", "tb_b", "bands_agree")
+    kept = scored.where(could_pass).select("a", "b", "channels", "hamming", "exact_hit")
 
     # Tier 2: exact Jaccard over shingle arrays, survivors only.
     sh = signatures.select("clip_id", "shingles")
@@ -135,6 +142,7 @@ def verify_candidates(
             (F.col("hamming") <= cfg.hamming_max)
             | (F.col("jaccard") >= cfg.jaccard_min)
             | F.col("substr_hit")
+            | F.col("exact_hit")
         )
     )
     return verified

@@ -2,16 +2,17 @@
 
 Stage graph (SURVEY.md §3.4):
 
-    corpus ──┬─> signatures  [snapshot]   fused Arrow UDFs + JVM shingling
-             │      │
-             │      v
-             └─> bands  (narrow explode; exact channel hashes bytes at scan)
+    corpus ───> signatures  [snapshot]   fused Arrow UDFs + JVM shingling;
+                    │                     the one corpus scan (bytes dies
+                    │                     here: SimHash + exact digests)
+                    v
+                 bands  (narrow explode of signature columns)
                     │   repartition(N, band keys)
                     v
                  candidates  [snapshot]   capped+salted band self-join
                     │
                     v
-                 verified    [snapshot]   exact Hamming/Jaccard/substring
+                 verified    [snapshot]   exact Hamming/Jaccard/substring/bytes
                     │
                     v
                  components  [snapshot]   large-star/small-star fixpoint
@@ -79,26 +80,27 @@ class DedupPipeline:
         self.decoders = decoders  # audio codec registry override
         self.metrics: dict[str, dict] = {}
 
-    def corpus(self) -> DataFrame:
-        return self.spark.read.parquet(self.corpus_path)
-
     # -- stages --------------------------------------------------------------
     def stage_signatures(self) -> DataFrame:
         """One fused signature projection: text sigs (JVM shingles + MinHash
         UDF) and audio sigs (scalar decode/fingerprint/SimHash UDF) in a
         single narrow scan — no join, `bytes` dies at the scan and never
         shuffles."""
-        return clip_signatures(self.corpus(), self.cfg, self.decoders)
+        corpus = self.spark.read.parquet(self.corpus_path)
+        return clip_signatures(corpus, self.cfg, self.decoders)
 
     def stage_candidates(self, sigs: DataFrame) -> tuple[DataFrame, dict]:
-        corpus = self.corpus()
-        bands = all_bands(corpus, sigs)
-        cand, stats = band_candidates(bands, self.cfg)
-        return cand, {
+        cand, stats = band_candidates(all_bands(sigs), self.cfg)
+        counters = {
             "dropped_buckets": stats.dropped_buckets,
             "dropped_rows": stats.dropped_rows,
             "salted_buckets": stats.salted_buckets,
+            # design recall at jaccard_min; the worst case once salted
+            "text_recall_at_threshold": self.cfg.text_recall_at_threshold,
         }
+        if stats.salted_buckets > 0:
+            counters["text_recall_salted"] = self.cfg.text_recall_salted
+        return cand, counters
 
     def stage_verified(self, cand: DataFrame, sigs: DataFrame) -> DataFrame:
         return verify_candidates(cand, sigs, self.cfg)

@@ -14,8 +14,7 @@ from pyspark.sql import SparkSession
 
 GIB = 1024 ** 3
 # Room the driver heap leaves for each local Python worker (pandas/pyarrow
-# imports plus in-flight Arrow batches) and for the OS, page cache and
-# tmpfs shuffle files.
+# imports plus in-flight Arrow batches) and for the OS and page cache.
 PY_WORKER_BYTES = GIB // 2
 OS_RESERVE_BYTES = 2 * GIB
 
@@ -69,20 +68,6 @@ GC_JVM_FLAGS = "-XX:+AlwaysPreTouch -XX:ParallelGCThreads=8 -XX:ConcGCThreads=2"
 # ship it via --py-files); the crash is not a host/AVX problem.
 
 
-def _local_dir() -> str:
-    """Shuffle/spill dir: tmpfs when available — shuffle files on this VM's
-    disk were a flat, parallelism-independent cost (a real cluster would use
-    striped NVMe; RAM-backed local dirs are the sandbox equivalent)."""
-    if os.environ.get("SPARK_LOCAL_DIRS"):
-        return os.environ["SPARK_LOCAL_DIRS"]
-    shm = "/dev/shm/spark-local"
-    try:
-        os.makedirs(shm, exist_ok=True)
-        return shm
-    except OSError:
-        return "/tmp"
-
-
 def get_spark(
     app_name: str = "relieff_lsh_spark",
     master: str | None = None,
@@ -127,7 +112,6 @@ def get_spark(
         # syscall count ~16x; on this VM kernel time dominated that path.
         .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.buffer.size", str(1024 * 1024))
-        .config("spark.local.dir", _local_dir())
         # Don't stall task launch on block locality: event-log profiling
         # (BENCH/stage_profile.py) showed stages over cached/localCheckpoint
         # blocks sitting 3s (the spark.locality.wait default) before their

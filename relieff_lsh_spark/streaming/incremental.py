@@ -9,7 +9,7 @@ comparisons rather than rebuilding it).
 
 Design (per micro-batch, inside foreachBatch — full batch API available):
 
-  1. sign the new clips (same text/audio/substr/exact channels as batch)
+  1. sign the new clips (same channels as batch; the only micro-batch read)
   2. append signatures AND their band rows to state tables — bands are
      computed ONCE per clip when it arrives, so per-batch CPU is O(batch),
      not O(history). The batch's own signatures, bands and verified edges
@@ -411,7 +411,7 @@ class IncrementalDedup:
             # an empty batch leaves no state behind
             shutil.rmtree(self._batch_dir("signatures", batch_id), ignore_errors=True)
             return
-        new_bands = all_bands(batch, new_sigs).withColumn(
+        new_bands = all_bands(new_sigs).withColumn(
             "bucket", F.pmod(F.xxhash64("band_hash"), F.lit(BUCKETS))
         ).localCheckpoint(eager=False)
         self._write_batch("bands", new_bands, batch_id)
@@ -446,11 +446,10 @@ class IncrementalDedup:
         # prune the signature-state scan to the candidate endpoints' id-hash
         # buckets (partition-column filter -> file-level pruning, symmetric
         # with the bands-state prune above). Lazy checkpoint: the collect
-        # right below is its first action.
+        # right below is its first action, and reads both endpoints in ONE
+        # scan (a second would block on the block the first is storing).
         cand = cand.localCheckpoint(eager=False)
-        endpoints = cand.select(F.col("a").alias("clip_id")).union(
-            cand.select(F.col("b").alias("clip_id"))
-        )
+        endpoints = cand.select(F.explode(F.array("a", "b")).alias("clip_id"))
         sig_buckets = [
             int(r[0])
             for r in endpoints.select(

@@ -14,6 +14,7 @@ import shutil
 import pandas as pd
 import pytest
 
+from relieff_lsh_spark.config import DedupConfig
 from relieff_lsh_spark.operators.components import pair_recall
 from relieff_lsh_spark.plans.dedup_pipeline import DedupPipeline
 from relieff_lsh_spark.plans.oracle import brute_oracle
@@ -122,3 +123,61 @@ def test_permutation_invariance(spark, cfg, tiny_corpus_dir, tmp_path):
     a = out1.catalog.read("components")
     b = out2.catalog.read("components")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_design_recall_recorded_in_manifest(spark, cfg, pipeline, tiny_corpus_dir,
+                                            tmp_path):
+    """The candidates manifest records the banding's design recall at
+    jaccard_min, and its salted worst case whenever a bucket was salted:
+    the 1k run salts nothing; a run capped at 2 rows per bucket salts."""
+    capped = DedupPipeline(
+        spark, DedupConfig(bucket_cap=2, shuffle_partitions=cfg.shuffle_partitions),
+        str(tmp_path / "wh"), f"{tiny_corpus_dir}/corpus.parquet",
+    )
+    capped.run(resume=False)
+    salted = []
+    for pipe in (pipeline, capped):
+        c = pipe.catalog.manifest("candidates")["counters"]
+        assert c["text_recall_at_threshold"] == pytest.approx(
+            pipe.cfg.text_recall_at_threshold
+        )
+        if c["salted_buckets"] > 0:
+            assert c["text_recall_salted"] == pytest.approx(pipe.cfg.text_recall_salted)
+        else:
+            assert "text_recall_salted" not in c
+        salted.append(c["salted_buckets"] > 0)
+    assert salted == [False, True]
+
+
+def test_byte_identical_clips_verify_on_their_digests(spark, cfg, tmp_path):
+    """FIXTURES §2: a byte-identical clone must be caught. Two identical
+    clips whose codec has no decoder (NULL simhash) and whose transcript is
+    two words (no shingle, no minimizer) meet only in the exact channel and
+    pass verify on their bytes digests alone. Two NULL-bytes clips with
+    different short transcripts have no digest, no band row, no candidate
+    pair, and stay apart."""
+    payload = bytes(range(256)) * 16
+    path = str(tmp_path / "corpus.parquet")
+    spark.createDataFrame(
+        [
+            ("x1", payload, "opus", "hello there"),
+            ("x2", payload, "opus", "hello there"),
+            ("n1", None, "opus", "good morning"),
+            ("n2", None, "opus", "good night"),
+        ],
+        "clip_id string, bytes binary, codec string, transcript string",
+    ).write.parquet(path)
+    pipe = DedupPipeline(spark, cfg, str(tmp_path / "wh"), path)
+    metrics = pipe.run(resume=False)
+
+    comps = {r["clip_id"]: r["component_id"]
+             for r in pipe.catalog.read("components").collect()}
+    assert comps == {"x1": "x1", "x2": "x1", "n1": "n1", "n2": "n2"}
+    ver = pipe.catalog.read("verified").collect()
+    assert [(r["a"], r["b"], r["exact_hit"], r["hamming"]) for r in ver] == [
+        ("x1", "x2", True, None)
+    ]
+    cand = pipe.catalog.read("candidates").collect()
+    assert [(r["a"], r["b"], r["channels"]) for r in cand] == [("x1", "x2", ["exact"])]
+    counters = metrics["candidates"]["counters"]
+    assert counters["salted_buckets"] == 0 and "text_recall_salted" not in counters

@@ -118,3 +118,29 @@ def test_hot_expressions_stay_in_codegen(spark):
     plan = _plan(df)
     assert "isFinalPlan=true" in plan
     assert "codegen id" in plan
+
+
+def test_candidates_stage_reads_no_corpus_bytes(spark, tiny_corpus_dir, tmp_path,
+                                                monkeypatch):
+    """The corpus -> signature boundary: clip_signatures is the only reader
+    of the corpus. The band relation that `stage_candidates` feeds the
+    self-join, over a signatures snapshot, has no scan that reads `bytes`
+    (the exact channel keys on the snapshot's digest column)."""
+    from relieff_lsh_spark.plans import dedup_pipeline as dp
+
+    pipe = dp.DedupPipeline(
+        spark, DedupConfig(shuffle_partitions=4), str(tmp_path / "wh"),
+        f"{tiny_corpus_dir}/corpus.parquet",
+    )
+    pipe.catalog.write("signatures", pipe.stage_signatures())
+    band_candidates, seen = dp.band_candidates, []
+
+    def capture(bands, cfg):
+        seen.append(bands)
+        return band_candidates(bands, cfg)
+
+    monkeypatch.setattr(dp, "band_candidates", capture)
+    pipe.stage_candidates(pipe.catalog.read("signatures"))
+    read = [l for l in _plan(seen[0]).splitlines() if "ReadSchema" in l]
+    assert read  # the signatures snapshot scan
+    assert not [l for l in read if "bytes:" in l]

@@ -285,7 +285,7 @@ def test_stream_cap_keeps_early_pairs_that_batch_drops(spark, tiny_corpus_dir,
     # rows at once -> whole buckets dropped, zero pairs found
     corpus8 = clones(range(8)).localCheckpoint()
     sigs = clip_signatures(corpus8, small).localCheckpoint()
-    cand, stats = band_candidates(all_bands(corpus8, sigs), small)
+    cand, stats = band_candidates(all_bands(sigs), small)
     assert stats.dropped_buckets > 0
     assert cand.count() == 0
     assert len(stream_edges) > 0  # stream recall > batch recall here

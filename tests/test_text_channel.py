@@ -7,7 +7,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from relieff_lsh_spark.functions.signatures import clip_signatures
-from relieff_lsh_spark.functions.text import band_hashes_expr
+from relieff_lsh_spark.functions.text import band_hashes_expr, make_minhash_udf
 from relieff_lsh_spark.plans.oracle import jaccard, shingle_set
 
 
@@ -21,6 +21,12 @@ def _sig_df(spark, cfg, texts):
     return clip_signatures(df, cfg).orderBy("clip_id")
 
 
+def _with_minhash(sigs, cfg):
+    """The MinHash signature clip_signatures bands (it keeps only the
+    bands): the product UDF over the product shingle column."""
+    return sigs.withColumn("minhash", make_minhash_udf(cfg)("shingles"))
+
+
 def test_shingle_counts_match_python(spark, cfg):
     texts = [
         "a b c d e f g",            # 7 tokens -> 3 distinct 5-shingles
@@ -29,7 +35,9 @@ def test_shingle_counts_match_python(spark, cfg):
         "",                         # empty -> 0
         "  padded   spacing  here and more words  ",
     ]
-    rows = _sig_df(spark, cfg, texts).select("n_shingles", "simhash").collect()
+    rows = _sig_df(spark, cfg, texts).select(
+        F.size("shingles").alias("n_shingles"), "simhash"
+    ).collect()
     got = [r["n_shingles"] for r in rows]
     want = [len(shingle_set(t, cfg.shingle_k)) for t in texts]
     assert got == want
@@ -37,7 +45,9 @@ def test_shingle_counts_match_python(spark, cfg):
 
 
 def test_identical_text_identical_signature(spark, cfg):
-    sigs = _sig_df(spark, cfg, ["w1 w2 w3 w4 w5 w6 w7 w8"] * 2).collect()
+    sigs = _with_minhash(
+        _sig_df(spark, cfg, ["w1 w2 w3 w4 w5 w6 w7 w8"] * 2), cfg
+    ).collect()
     assert sigs[0]["minhash"] == sigs[1]["minhash"]
     assert sigs[0]["text_bands"] == sigs[1]["text_bands"]
 
@@ -49,7 +59,7 @@ def test_minhash_estimates_jaccard(spark, cfg):
     variant[30] = "XXX"  # 1 substitution
     t1, t2 = " ".join(base), " ".join(variant)
     true_j = jaccard(shingle_set(t1, cfg.shingle_k), shingle_set(t2, cfg.shingle_k))
-    rows = _sig_df(spark, cfg, [t1, t2]).orderBy("clip_id").collect()
+    rows = _with_minhash(_sig_df(spark, cfg, [t1, t2]), cfg).orderBy("clip_id").collect()
     m1, m2 = np.array(rows[0]["minhash"]), np.array(rows[1]["minhash"])
     est = float((m1 == m2).mean())
     assert abs(est - true_j) < 0.15
