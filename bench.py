@@ -217,10 +217,8 @@ def main() -> None:
             # warms one worker). The timed region below still performs
             # every byte of real work; what it measures is warm-engine
             # throughput, comparable round to round.
-            warm_cfg = DedupConfig(shuffle_partitions=CPUS)
             clip_signatures(
-                spark.read.parquet(os.path.join(corpus_dir, "corpus.parquet")),
-                warm_cfg,
+                spark.read.parquet(os.path.join(corpus_dir, "corpus.parquet"))
             ).write.format("noop").mode("overwrite").save()
             # warehouse in tmpfs, matching BENCH/scaling.py's documented
             # choice: stage snapshots are written AND re-read, and this

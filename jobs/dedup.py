@@ -15,16 +15,19 @@ Usage (cluster):
 Usage (local, no spark-submit):
     python jobs/dedup.py --corpus ... --warehouse ... --master local[8]
 
-Flags mirror the reference's knobs where they have an analog:
+Flags are what a user means: the two thresholds --jaccard-min /
+--hamming-max, the shuffle width, and resume. Every DedupConfig field is one
+flag. The reference's knobs map as follows:
   reference -p num_partitions  -> --shuffle-partitions (default: the
                                   session's spark.sql.shuffle.partitions)
-  reference -c maxComparisons  -> --bucket-cap / --salt-factor (per-bucket
-                                  work budget)
-  reference -n/-l (tables/key) -> --bands/--rows-per-band (b x r banding;
-                                  the MinHash length is bands x rows)
+  reference -c maxComparisons  -> the constant per-bucket work budget
+                                  (BUCKET_CAP, SALT_FACTOR in
+                                  operators/candidates.py)
+  reference -n/-l (tables/key) -> the constant b x r text banding
+                                  (TEXT_BANDS x TEXT_ROWS in functions/text.py)
   reference -f graph file      -> --resume (read completed stage snapshots)
-plus the thresholds --jaccard-min / --hamming-max and the shingle width
---shingle-k. Every DedupConfig field is one flag.
+The metrics JSON records the config and the signature geometry
+(config.geometry()) the run used.
 """
 
 from __future__ import annotations
@@ -60,32 +63,24 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                    help="skip stages whose snapshot already exists")
     p.add_argument("--metrics-out", default=None,
                    help="write the run-metrics JSON here (default: stdout only)")
-    # config knobs (defaults = canonical FIXTURES.md §4 config)
-    p.add_argument("--shingle-k", type=int, default=5)
-    p.add_argument("--bands", type=int, default=32)
-    p.add_argument("--rows-per-band", type=int, default=4)
-    p.add_argument("--jaccard-min", type=float, default=0.8)
-    p.add_argument("--hamming-max", type=int, default=3)
-    p.add_argument("--bucket-cap", type=int, default=64)
-    p.add_argument("--salt-factor", type=int, default=8)
+    # thresholds (defaults = canonical FIXTURES.md §4 config)
+    p.add_argument("--jaccard-min", type=float, default=0.8,
+                   help="text duplicate: exact shingle Jaccard >= this")
+    p.add_argument("--hamming-max", type=int, default=3,
+                   help="audio duplicate: SimHash-64 Hamming <= this (max 3)")
     return p.parse_args(argv)
 
 
 def main(argv: list[str] | None = None) -> dict:
     args = parse_args(argv)
 
-    from relieff_lsh_spark.config import DedupConfig
+    from relieff_lsh_spark.config import DedupConfig, geometry
     from relieff_lsh_spark.plans.dedup_pipeline import DedupPipeline
     from relieff_lsh_spark.session import get_spark
 
     cfg = DedupConfig(
-        shingle_k=args.shingle_k,
-        bands=args.bands,
-        rows_per_band=args.rows_per_band,
         jaccard_min=args.jaccard_min,
         hamming_max=args.hamming_max,
-        bucket_cap=args.bucket_cap,
-        salt_factor=args.salt_factor,
         shuffle_partitions=args.shuffle_partitions,
     )
     spark = get_spark(
@@ -111,7 +106,7 @@ def main(argv: list[str] | None = None) -> dict:
         "wall_seconds": wall,
         "n_clips": int(n_clips),
         "clips_per_sec": round(n_clips / wall, 2),
-        "config": cfg.to_dict(),
+        "config": {**cfg.to_dict(), "geometry": geometry()},
         "stages": metrics,
     }
     line = json.dumps(out)

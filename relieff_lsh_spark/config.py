@@ -7,13 +7,16 @@ maxComparisons), reshaped for near-duplicate detection. Thresholds are
 global constant from the first edge at R:372 — a smell SURVEY.md §4 tells us
 to avoid).
 
-`DedupConfig` holds only what a caller sets: the thresholds, the text
-banding, the skew budget and the shuffle width. Everything else is either
-derived here (`n_perms = bands * rows_per_band`) or a module constant beside
-the one function that reads it (the fingerprint/FFT shape in
-functions/audio.py, the winnowing widths in functions/signatures.py, the
-verify prefilter in operators/verify.py, the SimHash geometry and the seed
-below). The canonical values are pinned by FIXTURES.md §4 so that "same
+`DedupConfig` holds what a user means: the two verification thresholds and
+the shuffle width. Everything else is a module constant beside the one
+function that reads it: the shingle and winnowing widths in
+functions/signatures.py, the text banding (`TEXT_BANDS` x `TEXT_ROWS`) in
+functions/text.py, the fingerprint/FFT shape in functions/audio.py, the
+skew budget (`BUCKET_CAP`, `SALT_FACTOR`) in operators/candidates.py, the
+verify prefilter in operators/verify.py, the fixpoint round budget in
+operators/components.py, and the SimHash geometry and the seed below.
+`geometry()` collects the ones that shape a stored signature or band row.
+The canonical values are pinned by FIXTURES.md §4 so that "same
 shingle/signature config" (BASELINE.json) is well-defined across the
 pipeline, the brute-force oracle, and the bench harness.
 """
@@ -32,20 +35,37 @@ SIMHASH_BITS = 64
 SIMHASH_BANDS = 4
 
 
+def geometry() -> dict:
+    """Every constant that shapes a stored signature or band row, by name.
+    A stream state refuses a micro-batch signed with a different one
+    (streaming/incremental.py), and a `jobs/dedup.py` run records it.
+    Read at call time, from the module that defines each constant."""
+    # imported here: each of these modules imports this one
+    from relieff_lsh_spark.functions import audio, signatures, text
+    from relieff_lsh_spark.streaming import incremental
+
+    return {
+        "SHINGLE_K": signatures.SHINGLE_K,
+        "SUBSTR_K": signatures.SUBSTR_K,
+        "SUBSTR_WINDOW": signatures.SUBSTR_WINDOW,
+        "TEXT_BANDS": text.TEXT_BANDS,
+        "TEXT_ROWS": text.TEXT_ROWS,
+        "SEED": SEED,
+        "SIMHASH_BITS": SIMHASH_BITS,
+        "SIMHASH_BANDS": SIMHASH_BANDS,
+        "N_FREQ_BANDS": audio.N_FREQ_BANDS,
+        "FMAX_HZ": audio.FMAX_HZ,
+        "FFT_WINDOW": audio.FFT_WINDOW,
+        "FFT_HOP": audio.FFT_HOP,
+        "MAX_FFT_FRAMES": audio.MAX_FFT_FRAMES,
+        "BUCKETS": incremental.BUCKETS,
+    }
+
+
 @dataclass(frozen=True)
 class DedupConfig:
-    # --- text channel: k-shingle MinHash, banded b x r (OR-construction) ---
-    shingle_k: int = 5          # word-shingle width
-    bands: int = 32             # LSH bands (b)
-    rows_per_band: int = 4      # rows per band (r); n_perms = b * r
-    jaccard_min: float = 0.8    # exact-Jaccard verification threshold
-
-    # --- audio channel: spectral fingerprint -> SimHash-64 ---
-    hamming_max: int = 3
-
-    # --- skew / work budget (maxComparisons analog, reference R:159,173) ---
-    bucket_cap: int = 64        # max rows per (band, hash) bucket before action
-    salt_factor: int = 8        # hot buckets split into this many sub-buckets
+    jaccard_min: float = 0.8    # text: exact-Jaccard verification threshold
+    hamming_max: int = 3        # audio: SimHash-64 Hamming threshold
 
     # --- physical: None = the session's spark.sql.shuffle.partitions ---
     shuffle_partitions: int | None = None
@@ -66,30 +86,30 @@ class DedupConfig:
         if self.text_recall_at_threshold < 0.99:
             raise ValueError(
                 f"banded MinHash recall at jaccard_min={self.jaccard_min} is "
-                f"{self.text_recall_at_threshold:.4f} < 0.99; raise bands or "
-                "lower rows_per_band"
+                f"{self.text_recall_at_threshold:.4f} < 0.99 under the fixed "
+                "text banding; raise jaccard_min"
             )
-
-    @property
-    def n_perms(self) -> int:
-        """MinHash signature length: one row per band slot."""
-        return self.bands * self.rows_per_band
 
     @property
     def text_recall_at_threshold(self) -> float:
         """P(>=1 band collision) for a pair at jaccard == jaccard_min:
         1 - (1 - j^r)^b. Pairs above the threshold only do better."""
-        return 1.0 - (1.0 - self.jaccard_min ** self.rows_per_band) ** self.bands
+        from relieff_lsh_spark.functions import text
+
+        return 1.0 - (1.0 - self.jaccard_min ** text.TEXT_ROWS) ** text.TEXT_BANDS
 
     @property
     def text_recall_salted(self) -> float:
         """Worst-case recall when EVERY band bucket a pair shares is salted:
         the pair survives a salted band only if both sides land in the same
-        of salt_factor sub-buckets (p = j^r / salt_factor per band). The
+        of SALT_FACTOR sub-buckets (p = j^r / SALT_FACTOR per band). The
         real cost is far smaller — salting only triggers on buckets past
-        bucket_cap — but this bound is logged so the trade-off is explicit."""
-        p = self.jaccard_min ** self.rows_per_band / self.salt_factor
-        return 1.0 - (1.0 - p) ** self.bands
+        BUCKET_CAP — but this bound is logged so the trade-off is explicit."""
+        from relieff_lsh_spark.functions import text
+        from relieff_lsh_spark.operators import candidates
+
+        p = self.jaccard_min ** text.TEXT_ROWS / candidates.SALT_FACTOR
+        return 1.0 - (1.0 - p) ** text.TEXT_BANDS
 
     def partitions(self, spark) -> int:
         """Shuffle width of the explicit repartitions: the configured count,

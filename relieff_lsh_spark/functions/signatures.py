@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from relieff_lsh_spark.config import DedupConfig
 from relieff_lsh_spark.functions.audio import make_simhash_udf
 from relieff_lsh_spark.functions.text import (
     band_hashes_expr,
@@ -24,6 +23,10 @@ from relieff_lsh_spark.functions.text import (
     tokens_expr,
 )
 
+# Text channel: distinct SHINGLE_K-word shingles feed the MinHash and the
+# exact Jaccard (the brute-force oracle shingles with the same width).
+SHINGLE_K = 5
+
 # Substring channel: winnowing minimizers over SUBSTR_K-word shingles with a
 # SUBSTR_WINDOW-wide window; any shared verbatim span of
 # >= SUBSTR_K + SUBSTR_WINDOW - 1 words shares a minimizer key.
@@ -31,9 +34,7 @@ SUBSTR_K = 4
 SUBSTR_WINDOW = 2
 
 
-def clip_signatures(
-    corpus: DataFrame, cfg: DedupConfig, decoders: dict | None = None
-) -> DataFrame:
+def clip_signatures(corpus: DataFrame, decoders: dict | None = None) -> DataFrame:
     """corpus -> (clip_id, transcript, codec, shingles, substr_keys,
     simhash, text_bands, exact_hash, exact_murmur). Narrow; bytes dies at
     the scan. `decoders` overrides the audio codec registry
@@ -52,7 +53,7 @@ def clip_signatures(
     distinct/minimizer views derive from the materialized columns — inline
     composition re-evaluates the hashing per window element (O(n^2)/row;
     measured 116s of a 165s stage)."""
-    minhash_udf = make_minhash_udf(cfg)
+    minhash_udf = make_minhash_udf()
     simhash_udf = make_simhash_udf(decoders)
     staged = corpus.select(
         "clip_id",
@@ -73,7 +74,7 @@ def clip_signatures(
         "exact_hash",
         "exact_murmur",
         F.array_distinct(
-            shingle_hashes_from_tokens(F.col("th"), cfg.shingle_k)
+            shingle_hashes_from_tokens(F.col("th"), SHINGLE_K)
         ).alias("shingles"),
         shingle_hashes_from_tokens(F.col("th"), SUBSTR_K).alias("pos_sub"),
     )
@@ -91,7 +92,7 @@ def clip_signatures(
         "substr_keys",
         "simhash",  # NULL = codec quarantined (no decoder); the clip still
         #             dedups via exact/text/substr channels
-        band_hashes_expr(F.col("minhash"), cfg).alias("text_bands"),
+        band_hashes_expr(F.col("minhash")).alias("text_bands"),
         "exact_hash",
         "exact_murmur",
     )

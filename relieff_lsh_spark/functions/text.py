@@ -19,9 +19,17 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from relieff_lsh_spark.config import SEED, DedupConfig
+from relieff_lsh_spark.config import SEED
 
 _MERSENNE61 = (1 << 61) - 1
+
+# Text banding: TEXT_BANDS bands of TEXT_ROWS MinHash rows (b x r
+# OR-construction), so the signature is TEXT_PERMS long. At the canonical
+# jaccard_min = 0.8 a pair collides on >= 1 band with probability
+# 1 - (1 - 0.8^4)^32 ~ 1 - 4.7e-8 (DedupConfig checks the 0.99 budget).
+TEXT_BANDS = 32
+TEXT_ROWS = 4
+TEXT_PERMS = TEXT_BANDS * TEXT_ROWS
 
 
 def tokens_expr(col: str | Column = "transcript") -> Column:
@@ -82,15 +90,15 @@ def minimizer_keys_from(hashes: Column, w: int) -> Column:
     )
 
 
-def minhash_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
+def minhash_params() -> tuple[np.ndarray, np.ndarray]:
     """Seeded universal-hash coefficients (a*h + b mod 2^61-1)."""
     rng = np.random.default_rng(SEED ^ 0x5EED_1111)
-    a = rng.integers(1, _MERSENNE61, cfg.n_perms, dtype=np.int64).astype(np.uint64)
-    b = rng.integers(0, _MERSENNE61, cfg.n_perms, dtype=np.int64).astype(np.uint64)
+    a = rng.integers(1, _MERSENNE61, TEXT_PERMS, dtype=np.int64).astype(np.uint64)
+    b = rng.integers(0, _MERSENNE61, TEXT_PERMS, dtype=np.int64).astype(np.uint64)
     return a, b
 
 
-def make_minhash_udf(cfg: DedupConfig):
+def make_minhash_udf():
     """arrow_udf: array<bigint> shingle hashes -> array<bigint> MinHash sig.
 
     Vectorized per batch: for each row a (n_perms x n_shingles) uint64 matrix
@@ -100,8 +108,8 @@ def make_minhash_udf(cfg: DedupConfig):
     """
     from pyspark.sql.functions import arrow_udf
 
-    a, b = minhash_params(cfg)
-    n_perms = cfg.n_perms
+    a, b = minhash_params()
+    n_perms = TEXT_PERMS
     sentinel = np.full(n_perms, _MERSENNE61 - 1, dtype=np.int64)
 
     @arrow_udf(T.ArrayType(T.LongType()))
@@ -145,13 +153,13 @@ def make_minhash_udf(cfg: DedupConfig):
     return minhash
 
 
-def band_hashes_expr(sig: Column, cfg: DedupConfig) -> Column:
-    """array<bigint>[bands]: xxhash64 of each r-row slice of the signature,
-    salted with the band index so identical slices in different bands never
-    collide. JVM-side."""
-    r = cfg.rows_per_band
+def band_hashes_expr(sig: Column) -> Column:
+    """array<bigint>[TEXT_BANDS]: xxhash64 of each TEXT_ROWS-row slice of
+    the signature, salted with the band index so identical slices in
+    different bands never collide. JVM-side."""
+    r = TEXT_ROWS
     return F.transform(
-        F.sequence(F.lit(0), F.lit(cfg.bands - 1)),
+        F.sequence(F.lit(0), F.lit(TEXT_BANDS - 1)),
         lambda bnd: F.xxhash64(
             F.concat_ws(",", F.transform(F.slice(sig, bnd * r + 1, r),
                                          lambda v: v.cast("string"))),

@@ -9,7 +9,7 @@ keys per SURVEY.md §2.2 P4 / §2.3 J4). Every channel reads the
 clip_signatures table only; nothing here touches the corpus.
 
 Channels:
-  text   — cfg.bands banded-MinHash hashes per clip (b x r OR-construction;
+  text   — TEXT_BANDS banded-MinHash hashes per clip (b x r OR-construction;
            one banding, which alone clears the 0.99 recall budget at
            jaccard_min — DedupConfig checks it)
   audio  — simhash split into SIMHASH_BANDS x 16-bit chunks: pigeonhole-exact

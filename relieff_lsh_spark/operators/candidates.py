@@ -5,13 +5,14 @@ paired, with the `a < b` predicate inside the join condition so the pair
 space is halved before anything is materialized (the reference's x<y filter,
 ReliefFFeatureSelector.scala:128, pushed into the join per SURVEY.md §4 O2).
 
-Skew policy (SURVEY.md §4 O6/O7 — the maxComparisons analog, R:159/173):
+Skew policy (SURVEY.md §4 O6/O7 — the maxComparisons analog, R:159/173;
+cap = BUCKET_CAP, factor = SALT_FACTOR):
   bucket count <= cap                 : join as-is (salt 0)
-  cap < count <= cap * salt_factor    : salt into salt_factor sub-buckets
+  cap < count <= cap * factor         : salt into factor sub-buckets
                                         (per-band salt assignment, so different
                                         bands cut a hot group differently and
                                         transitive closure still links it)
-  count > cap * salt_factor           : drop the bucket, COUNT THE DROPS
+  count > cap * factor                : drop the bucket, COUNT THE DROPS
                                         (no silent truncation)
 
 Physical shape (round-2 rework — the round-1 version computed the bucket
@@ -44,6 +45,12 @@ from relieff_lsh_spark.config import DedupConfig
 
 BUCKET_KEYS = ["channel", "band_id", "band_hash"]
 
+# Per-bucket work budget: a bucket of up to BUCKET_CAP rows joins whole (at
+# most C(64, 2) = 2016 pairs); up to BUCKET_CAP * SALT_FACTOR rows it is
+# split into SALT_FACTOR sub-buckets; past that it is dropped and counted.
+BUCKET_CAP = 64
+SALT_FACTOR = 8
+
 
 @dataclass
 class CandidateStats:
@@ -60,7 +67,7 @@ def band_candidates(
     bands: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, CandidateStats]:
     """bands -> distinct candidate pairs (a, b, channels: array<string>)."""
-    cap, factor = cfg.bucket_cap, cfg.salt_factor
+    cap, factor = BUCKET_CAP, SALT_FACTOR
     n_part = cfg.partitions(bands.sparkSession)
 
     # explicit repartition by the signature-band key ahead of the self-join

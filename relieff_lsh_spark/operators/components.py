@@ -31,11 +31,14 @@ is exact, costs no extra round to confirm, and an input that is already a
 star forest (e.g. only 2-clip components) converges in 0 rounds.
 
 Lineage/restart discipline: each round the edge state is truncated with
-localCheckpoint; when `checkpoint_dir` is given, every `checkpoint_every`-th
+localCheckpoint; when `checkpoint_dir` is given, every CHECKPOINT_EVERY-th
 round ALSO writes the state to parquet (the reference's persisted-graph
 resume, R:262/336) and a fresh call resumes from the newest valid round —
 on a real cluster localCheckpoint blocks die with their executor, so the
-fixpoint loop needs storage-backed checkpoints to survive restarts.
+fixpoint loop needs storage-backed checkpoints to survive restarts. Each
+call runs at most MAX_ROUNDS rounds counted from the round it resumed at,
+so a call that runs out of rounds leaves a checkpoint the next call
+continues from.
 """
 
 from __future__ import annotations
@@ -76,6 +79,16 @@ PAIRS_PER_BARRIER = 2  # star (large+small) pairs composed lazily per
 # fewer barriers = less fixed cost, at the price of up to
 # PAIRS_PER_BARRIER-1 wasted (cheap, already-converged) rounds after the
 # true fixpoint
+
+# Round budget of one call, counted from the round it resumed at. The star
+# fixpoint converges in O(log n) rounds (~8 on the 92k-diameter bench
+# component), so 25 is a guard against a non-converging loop, not a limit a
+# dedup graph reaches.
+MAX_ROUNDS = 25
+# Rounds between storage-backed checkpoints: one mid-fixpoint write for
+# the round counts dedup graphs exhibit — the restart-protection/extra-write
+# trade-off round 2 effectively ran with.
+CHECKPOINT_EVERY = 10
 
 
 @dataclass
@@ -161,19 +174,13 @@ def _latest_checkpoint(checkpoint_dir: str) -> tuple[int, str] | None:
 
 
 def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame,
-    max_iters: int = 25,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 10,  # rounds between storage-backed checkpoints;
-    # 10 = one mid-fixpoint write for the O(log n) round counts dedup graphs
-    # exhibit (the star fixpoint converges in ~8 rounds on the 92k-diameter
-    # bench component) — the restart-protection/extra-write trade-off
-    # round 2 effectively ran with
+    edges: DataFrame, vertices: DataFrame, checkpoint_dir: str | None = None
 ) -> ComponentsResult:
     """edges(a, b) undirected + vertices(clip_id) -> (clip_id, component_id)
     where component_id = min clip_id in the component. Singletons keep their
-    own id."""
+    own id. `iterations` counts rounds from the first call on this
+    `checkpoint_dir`; `converged=False` means this call spent MAX_ROUNDS
+    rounds, and a call on the same dir continues from its last checkpoint."""
     spark = edges.sparkSession
     e = (
         edges.select(
@@ -198,9 +205,9 @@ def connected_components(
     converged = _is_star_forest(e)
     it = start_round
     last_ckpt = start_round  # rounds-since-checkpoint tracker: the loop
-    # advances `it` by 2 per pass, so a naive `it % checkpoint_every == 0`
-    # with an odd cadence would only fire on multiples of 2*checkpoint_every
-    while not converged and it < max_iters:
+    # advances `it` by 2 per pass, so a naive `it % CHECKPOINT_EVERY == 0`
+    # with an odd cadence would only fire on multiples of 2*CHECKPOINT_EVERY
+    while not converged and it - start_round < MAX_ROUNDS:
         # PAIRS_PER_BARRIER star rounds composed lazily per materialization
         # barrier: the stage is latency-bound (per-job scheduling dwarfs the
         # per-round edge shuffle at dedup edge densities), so halving the
@@ -212,7 +219,7 @@ def connected_components(
         e = ne.localCheckpoint(eager=False)
         # the exact convergence test materializes the lazy checkpoint
         converged = _is_star_forest(e)
-        if checkpoint_dir and (it - last_ckpt >= checkpoint_every) and not converged:
+        if checkpoint_dir and (it - last_ckpt >= CHECKPOINT_EVERY) and not converged:
             path = os.path.join(checkpoint_dir, f"round_{it}")
             e.write.mode("overwrite").parquet(path)
             e = spark.read.parquet(path)

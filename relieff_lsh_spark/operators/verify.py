@@ -18,7 +18,7 @@ byte-identical pair passes on `exact_hit` alone).
 
 Two-tier attach (the 100 TB shuffle-budget fix): the first signature join
 ships only FIXED-WIDTH columns — simhash (8 B), the two bytes digests
-(12 B) and the LSH band hashes (cfg.bands x 8 B) — and computes hamming,
+(12 B) and the LSH band hashes (TEXT_BANDS x 8 B) — and computes hamming,
 the byte-identity test and the number of agreeing bands. Only pairs that
 could still pass some metric (hamming or byte identity already passed,
 substr channel, or >= PREFILTER_MIN_BANDS agreeing text bands) join the
@@ -45,16 +45,17 @@ from relieff_lsh_spark.functions.distance import (
     minhash_agree_n,
     substr_either,
 )
+from relieff_lsh_spark.functions.text import TEXT_BANDS
 
 VERIFIED_COLS = ["a", "b", "hamming", "jaccard", "substr_hit", "channels", "exact_hit"]
 
 # Tier-1 prefilter: candidate pairs only join their (unbounded-width)
 # shingle arrays for exact-Jaccard verification when at least this many of
-# the text bands (cfg.bands x 8 B, already in the signature) agree — or the
+# the text bands (TEXT_BANDS x 8 B, already in the signature) agree — or the
 # pair can pass via another channel. One agreeing band is what MADE it a
 # candidate, so requiring a second is the cheapest possible "can this pass
 # Jaccard?" screen: at jaccard_min=0.8 a true pair misses with probability
-# P(Binom(bands, j^r) <= PREFILTER_MIN_BANDS - 1) ~ 1.7e-6; a spurious
+# P(Binom(TEXT_BANDS, j^r) <= PREFILTER_MIN_BANDS - 1) ~ 1.7e-6; a spurious
 # collision (j <= 0.5) has p_band = j^r <= 0.0625 and is pruned with
 # probability >= 0.86 before the shingle arrays ever move. The first design
 # used the full minhash signature (128 x 8 B) as the tier-1 payload —
@@ -101,8 +102,8 @@ def verify_candidates(
             # is CodegenFallback — round-6, functions/distance.py);
             # NULL-safe: a missing signature must not prune (keep)
             F.coalesce(
-                minhash_agree_n(F.col("text_bands_a"), F.col("text_bands_b"), cfg.bands),
-                F.lit(cfg.bands),
+                minhash_agree_n(F.col("text_bands_a"), F.col("text_bands_b"), TEXT_BANDS),
+                F.lit(TEXT_BANDS),
             ),
         )
     )

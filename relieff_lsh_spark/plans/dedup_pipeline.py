@@ -87,7 +87,7 @@ class DedupPipeline:
         single narrow scan — no join, `bytes` dies at the scan and never
         shuffles."""
         corpus = self.spark.read.parquet(self.corpus_path)
-        return clip_signatures(corpus, self.cfg, self.decoders)
+        return clip_signatures(corpus, self.decoders)
 
     def stage_candidates(self, sigs: DataFrame) -> tuple[DataFrame, dict]:
         cand, stats = band_candidates(all_bands(sigs), self.cfg)
@@ -122,12 +122,13 @@ class DedupPipeline:
         if not res.converged:
             # Raise BEFORE the snapshot write: a persisted non-converged
             # components table would be silently reused by run(resume=True).
-            # The round-checkpoint dir is left in place so a retry with a
-            # larger max_iters resumes the fixpoint, not restarts it.
+            # The round-checkpoint dir is left in place so a retry resumes
+            # the fixpoint with a fresh round budget, not restarts it.
             raise RuntimeError(
-                "connected-components did not converge within max_iters; "
-                f"no components snapshot written — retry with a larger "
-                f"max_iters (fixpoint resumes from {ckpt})"
+                f"connected-components did not converge after {res.iterations} "
+                "rounds; no components snapshot written — re-run with "
+                "resume=True (--resume) to continue the fixpoint from its last "
+                f"round checkpoint in {ckpt}"
             )
         import shutil
 

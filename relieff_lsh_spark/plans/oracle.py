@@ -23,6 +23,7 @@ from relieff_lsh_spark.functions.audio import (
     simhash64,
     spectral_fingerprint,
 )
+from relieff_lsh_spark.functions.signatures import SHINGLE_K
 
 _WS = re.compile(r"\s+")
 
@@ -82,25 +83,43 @@ def brute_oracle(corpus_pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
     corpus_pdf: pandas DataFrame with (clip_id, bytes, codec, transcript).
     Returns (clip_id, component_id) with component_id = min clip_id.
     O(n^2) — small fixtures only, exactly like the reference's brute method.
+
+    Judged like the pipeline: a clip with NULL bytes or a codec without a
+    decoder has no SimHash and gets no Hamming edge (quarantine), and
+    clips with equal non-NULL bytes are one component (byte identity).
     """
     ids = corpus_pdf["clip_id"].tolist()
     n = len(ids)
+    uf = UnionFind(ids)
 
     planes = simhash_planes()
-    sims = np.empty(n, dtype=np.uint64)
+    sims = np.zeros(n, dtype=np.uint64)
+    has_sim = np.zeros(n, dtype=bool)
+    first_with_bytes: dict[bytes, str] = {}
     for i, (buf, codec) in enumerate(zip(corpus_pdf["bytes"], corpus_pdf["codec"])):
-        x, sr = decode_pcm(bytes(buf), codec)
+        if buf is None:
+            continue
+        buf = bytes(buf)
+        uf.union(first_with_bytes.setdefault(buf, ids[i]), ids[i])
+        if codec is None:
+            continue
+        try:
+            x, sr = decode_pcm(buf, codec)
+        except NotImplementedError:
+            continue
         sims[i] = np.uint64(np.int64(simhash64(spectral_fingerprint(x, sr), planes)))
+        has_sim[i] = True
 
-    shingles = [shingle_set(t, cfg.shingle_k) for t in corpus_pdf["transcript"]]
+    shingles = [shingle_set(t, SHINGLE_K) for t in corpus_pdf["transcript"]]
     texts = [t.strip() for t in corpus_pdf["transcript"]]
 
-    uf = UnionFind(ids)
     # hamming for all pairs, vectorized one row at a time
     for i in range(n):
-        ham = _popcount64(sims[i] ^ sims[i + 1:])
-        for off in np.nonzero(ham <= cfg.hamming_max)[0]:
-            uf.union(ids[i], ids[i + 1 + off])
+        if has_sim[i]:
+            ham = _popcount64(sims[i] ^ sims[i + 1:])
+            near = (ham <= cfg.hamming_max) & has_sim[i + 1:]
+            for off in np.nonzero(near)[0]:
+                uf.union(ids[i], ids[i + 1 + off])
         si, ti = shingles[i], texts[i]
         for j in range(i + 1, n):
             if uf.find(ids[i]) == uf.find(ids[j]):

@@ -104,6 +104,12 @@ swap and the comp_merges swap leaves a state where components() simply
 re-applies the (now no-op) closure. The table order in STATE_TABLES
 (vertices before merges) is load-bearing for exactly that crash window.
 
+Geometry pin: stored signatures and band rows only match rows signed under
+the same constants (shingle widths, text banding, seed, SimHash/FFT shape,
+BUCKETS — config.geometry()). The first batch records them in
+`GEOMETRY.json`; a batch whose geometry differs is refused with a
+ValueError before it writes anything.
+
 Known, documented divergence from batch mode under the skew cap: the cap
 applies to the bucket's ACCUMULATED size at each batch, so pairs emitted
 while a bucket was still small are kept even if the bucket later grows past
@@ -121,7 +127,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from relieff_lsh_spark.config import DedupConfig
+from relieff_lsh_spark.config import DedupConfig, geometry
 from relieff_lsh_spark.functions.signatures import clip_signatures
 from relieff_lsh_spark.operators.banding import all_bands
 from relieff_lsh_spark.operators.candidates import band_candidates
@@ -143,6 +149,16 @@ STATE_TABLES = {
     "comp_vertices": "vbucket",
     "comp_merges": None,
 }
+
+
+def _has_data_file(path: str) -> bool:
+    """True iff some file under `path` is one a parquet read would load:
+    Spark skips names starting with `_` or `.` (`_SUCCESS`, `.crc`)."""
+    for _, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        if any(not f.startswith(("_", ".")) for f in files):
+            return True
+    return False
 
 
 class IncrementalDedup:
@@ -188,11 +204,15 @@ class IncrementalDedup:
     def _read_or_none(
         self, path: str, schema: StructType | None = None
     ) -> DataFrame | None:
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        try:
-            return reader.parquet(path)
-        except Exception:
+        """The parquet table at `path`, or None when it holds no data file
+        yet (never written, or every batch directory compacted away). The
+        check is a local listing, so no read is attempted on a missing
+        path; any error of an actual read propagates — a corrupt state
+        file must not read as "no prior state"."""
+        if not _has_data_file(path):
             return None
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
     def _state(
         self, table: str, before_batch: int | None = None,
@@ -398,12 +418,38 @@ class IncrementalDedup:
         stats["merge_edges_appended"] = self._write_batch("comp_merges", merges, batch_id)
         return stats
 
+    def _pin_geometry(self) -> None:
+        """The state's stored signatures and band rows are only comparable
+        with rows signed under the same constants: the first batch records
+        `geometry()` in the state dir, and a state recorded under a
+        different one is refused before this batch writes anything."""
+        want = geometry()
+        path = os.path.join(self.state_dir, "GEOMETRY.json")
+        if os.path.exists(path):
+            with open(path) as f:
+                have = json.load(f)
+            if have != want:
+                diff = {k: (have.get(k), want.get(k))
+                        for k in sorted(set(have) | set(want))
+                        if have.get(k) != want.get(k)}
+                raise ValueError(
+                    f"state {self.state_dir} was written with a different "
+                    f"signature geometry (stored, current): {diff}"
+                )
+            return
+        os.makedirs(self.state_dir, exist_ok=True)
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(want, f, sort_keys=True)
+        os.replace(tmp, path)
+
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         """One micro-batch. The batch's signatures, bands and verified edges
         sit behind LAZY checkpoints that their state writes materialize, so
         later steps reuse them at no extra job, and the bands prune list is
         the batch's own `bucket=` directories (no collect)."""
-        new_sigs = clip_signatures(batch, self.cfg).withColumn(
+        self._pin_geometry()
+        new_sigs = clip_signatures(batch).withColumn(
             "sig_bucket", F.pmod(F.xxhash64("clip_id"), F.lit(BUCKETS))
         ).localCheckpoint(eager=False)
         n_new = self._write_batch("signatures", new_sigs, batch_id)

@@ -173,13 +173,13 @@ def test_cross_codec_duplicates_cluster_via_audio_channel(spark, cfg, tmp_path):
     assert comp["solo"] != comp["dup_a"]
 
 
-def test_audio_signatures_spark_matches_local(spark, cfg, tiny_corpus_dir):
+def test_audio_signatures_spark_matches_local(spark, tiny_corpus_dir):
     """The product signature path's simhash column equals the local
     decode -> fingerprint -> simhash64 chain, clip by clip."""
     from relieff_lsh_spark.functions.signatures import clip_signatures
 
     corpus = spark.read.parquet(f"{tiny_corpus_dir}/corpus.parquet").limit(20)
-    rows = clip_signatures(corpus, cfg).select("clip_id", "simhash").collect()
+    rows = clip_signatures(corpus).select("clip_id", "simhash").collect()
     pdf = corpus.select("clip_id", "bytes", "codec").toPandas().set_index("clip_id")
     planes = simhash_planes()
     assert len(rows) == 20

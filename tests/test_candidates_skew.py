@@ -5,11 +5,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from relieff_lsh_spark.config import DedupConfig
+from relieff_lsh_spark.operators import candidates
 from relieff_lsh_spark.operators.candidates import band_candidates
 
 
 def _bands_df(spark, rows):
     return spark.createDataFrame(rows, ["clip_id", "channel", "band_id", "band_hash"])
+
+
+def _budget(monkeypatch, cap, factor):
+    """A tiny per-bucket work budget, so a handful of rows exercises it."""
+    monkeypatch.setattr(candidates, "BUCKET_CAP", cap)
+    monkeypatch.setattr(candidates, "SALT_FACTOR", factor)
 
 
 def test_small_bucket_all_pairs(spark, cfg):
@@ -21,8 +28,9 @@ def test_small_bucket_all_pairs(spark, cfg):
     assert stats.dropped_rows == 0 and stats.salted_buckets == 0
 
 
-def test_hot_bucket_salted_not_dropped(spark):
-    cfg = DedupConfig(bucket_cap=8, salt_factor=4, shuffle_partitions=8)
+def test_hot_bucket_salted_not_dropped(spark, monkeypatch):
+    _budget(monkeypatch, 8, 4)
+    cfg = DedupConfig(shuffle_partitions=8)
     rows = [(f"c{i:03d}", "text", 0, 999) for i in range(20)]  # cap < 20 <= cap*factor
     cand, stats = band_candidates(_bands_df(spark, rows), cfg)
     n = cand.count()
@@ -31,8 +39,9 @@ def test_hot_bucket_salted_not_dropped(spark):
     assert 0 < n < 190  # fewer than all C(20,2) pairs: salting cuts the bucket
 
 
-def test_oversized_bucket_dropped_and_logged(spark):
-    cfg = DedupConfig(bucket_cap=4, salt_factor=2, shuffle_partitions=8)
+def test_oversized_bucket_dropped_and_logged(spark, monkeypatch):
+    _budget(monkeypatch, 4, 2)
+    cfg = DedupConfig(shuffle_partitions=8)
     rows = [(f"c{i:03d}", "text", 0, 777) for i in range(10)]  # 10 > cap*factor=8
     cand, stats = band_candidates(_bands_df(spark, rows), cfg)
     assert cand.count() == 0
@@ -40,15 +49,16 @@ def test_oversized_bucket_dropped_and_logged(spark):
     assert stats.dropped_buckets == 1
 
 
-def test_per_band_salt_differs(spark):
+def test_per_band_salt_differs(spark, monkeypatch):
     """Salt assignment must vary by band so a hot group stays transitively
     connected through different band-wise cuts."""
-    cfg = DedupConfig(bucket_cap=4, salt_factor=4, shuffle_partitions=8)
+    _budget(monkeypatch, 4, 4)
+    cfg = DedupConfig(shuffle_partitions=8)
     rows = [(f"c{i:03d}", "text", b, 1000 + b) for i in range(16) for b in (0, 1, 2, 3)]
     cand, stats = band_candidates(_bands_df(spark, rows), cfg)
     assert stats.salted_buckets == 4
     # union of per-band sub-bucket pairs must connect more than one band's worth
-    pairs_per_band = 4 * 6  # salt_factor groups of ~4 -> C(4,2)=6
+    pairs_per_band = 4 * 6  # SALT_FACTOR groups of ~4 -> C(4,2)=6
     assert cand.count() > pairs_per_band
 
 

@@ -4,8 +4,16 @@ from __future__ import annotations
 
 import pytest
 
+from relieff_lsh_spark.operators import components
 from relieff_lsh_spark.operators.components import connected_components, pair_recall
 from relieff_lsh_spark.plans.oracle import UnionFind
+
+
+def _budget(monkeypatch, max_rounds, checkpoint_every):
+    """A short round budget and checkpoint cadence, so a small path graph
+    runs out of rounds."""
+    monkeypatch.setattr(components, "MAX_ROUNDS", max_rounds)
+    monkeypatch.setattr(components, "CHECKPOINT_EVERY", checkpoint_every)
 
 
 def _run(spark, edges, vertices):
@@ -112,10 +120,11 @@ def test_pair_recall_contingency(spark):
     assert m["precision"] == 1.0
 
 
-def test_resume_from_round_checkpoint(spark, tmp_path):
-    """Kill-mid-fixpoint resume: a run cut off by max_iters leaves persisted
-    round state; a fresh call with the same checkpoint_dir continues from it
-    (storage-backed, not executor-pinned localCheckpoint blocks)."""
+def test_resume_from_round_checkpoint(spark, tmp_path, monkeypatch):
+    """Kill-mid-fixpoint resume: a run cut off by its round budget leaves
+    persisted round state; a fresh call with the same checkpoint_dir
+    continues from it (storage-backed, not executor-pinned localCheckpoint
+    blocks)."""
     import os
 
     # a path graph needs several star rounds to collapse
@@ -125,26 +134,50 @@ def test_resume_from_round_checkpoint(spark, tmp_path):
     v = spark.createDataFrame([(x,) for x in vertices], ["clip_id"])
     ckpt = str(tmp_path / "rounds")
 
-    partial = connected_components(
-        e, v, max_iters=2, checkpoint_dir=ckpt, checkpoint_every=1
-    )
+    _budget(monkeypatch, 2, 1)
+    partial = connected_components(e, v, checkpoint_dir=ckpt)
     assert not partial.converged
     assert os.path.exists(os.path.join(ckpt, "round_2", "_SUCCESS"))
 
-    resumed = connected_components(
-        e, v, max_iters=25, checkpoint_dir=ckpt, checkpoint_every=1
-    )
+    _budget(monkeypatch, 25, 1)
+    resumed = connected_components(e, v, checkpoint_dir=ckpt)
     assert resumed.converged
     assert resumed.iterations > 2  # continued counting from the saved round
     got = {r["clip_id"]: r["component_id"] for r in resumed.components.collect()}
     assert all(c == "p00" for c in got.values())
 
 
-def test_checkpoint_cadence_odd_interval(spark, tmp_path):
-    """checkpoint_every is honored in rounds even though the loop advances
-    the round counter by 2 per pass: with checkpoint_every=3 a long-diameter
+def test_rerun_with_same_round_budget_makes_progress(spark, tmp_path, monkeypatch):
+    """A call that runs out of rounds is retried with the SAME budget (the
+    pipeline cannot raise it): each retry gets a fresh budget counted from
+    the round it resumed at, so the rounds keep advancing and a long path
+    converges on a later call. A budget counted from round 0 would leave
+    every retry at the resumed round, unconverged."""
+    n = 200
+    ids = [f"p{i:03d}" for i in range(n)]
+    e = spark.createDataFrame([(ids[i], ids[i + 1]) for i in range(n - 1)], ["a", "b"])
+    v = spark.createDataFrame([(x,) for x in ids], ["clip_id"])
+    ckpt = str(tmp_path / "rounds_retry")
+
+    _budget(monkeypatch, 4, 1)
+    rounds = []
+    res = connected_components(e, v, checkpoint_dir=ckpt)
+    rounds.append(res.iterations)
+    assert not res.converged  # path-200 needs more than 4 rounds
+    while not res.converged and len(rounds) < 6:
+        res = connected_components(e, v, checkpoint_dir=ckpt)
+        rounds.append(res.iterations)
+    assert res.converged, rounds
+    assert rounds == sorted(set(rounds)), rounds  # every call advanced
+    got = {r["clip_id"]: r["component_id"] for r in res.components.collect()}
+    assert got == {x: ids[0] for x in ids}
+
+
+def test_checkpoint_cadence_odd_interval(spark, tmp_path, monkeypatch):
+    """CHECKPOINT_EVERY is honored in rounds even though the loop advances
+    the round counter by 2 per pass: with a cadence of 3 a long-diameter
     graph must persist a round no later than round 4 (the first pass where
-    rounds-since-last-checkpoint >= 3). The pre-fix `it % checkpoint_every`
+    rounds-since-last-checkpoint >= 3). The pre-fix `it % CHECKPOINT_EVERY`
     test would first fire at round 6."""
     import os
 
@@ -154,16 +187,15 @@ def test_checkpoint_cadence_odd_interval(spark, tmp_path):
     v = spark.createDataFrame([(x,) for x in vertices], ["clip_id"])
     ckpt = str(tmp_path / "rounds_odd")
 
-    res = connected_components(
-        e, v, max_iters=4, checkpoint_dir=ckpt, checkpoint_every=3
-    )
+    _budget(monkeypatch, 4, 3)
+    res = connected_components(e, v, checkpoint_dir=ckpt)
     assert not res.converged  # path-40 needs more than 4 rounds
     assert os.path.exists(os.path.join(ckpt, "round_4", "_SUCCESS"))
 
 
 def test_long_path_converges_within_round_cap(spark):
     """Adversarial diameter (round-4 VERDICT optional #7): a path graph of
-    diameter 400 >> max_iters=25. Plain min-label propagation needs
+    diameter 400 >> MAX_ROUNDS=25. Plain min-label propagation needs
     O(diameter) rounds and would hit the cap unconverged — the round-2
     defect class. The star algorithm's O(log n) contraction must converge
     well inside the cap and label every vertex with the global minimum."""

@@ -18,10 +18,18 @@ def test_canonical_config_clears_recall_budget():
     assert 0.0 < cfg.text_recall_salted < cfg.text_recall_at_threshold
 
 
-def test_insufficient_banding_rejected():
+def test_insufficient_banding_rejected(monkeypatch):
     # b=4, r=4 at j=0.8: recall 1-(1-0.4096)^4 ~= 0.878 < 0.99
+    from relieff_lsh_spark.functions import text
+
+    monkeypatch.setattr(text, "TEXT_BANDS", 4)
     with pytest.raises(ValueError, match="recall"):
-        DedupConfig(bands=4, rows_per_band=4)
+        DedupConfig()
+    # the user's knob: at the fixed 32 x 4 banding, j=0.3 collides on some
+    # band with probability 1-(1-0.0081)^32 ~= 0.23
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match="recall"):
+        DedupConfig(jaccard_min=0.3)
 
 
 def test_pigeonhole_guard():

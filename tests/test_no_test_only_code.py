@@ -7,7 +7,10 @@ only, no Spark): a name counts as referenced when some non-test module
 (the package, jobs/, hostbench/, BENCH/ and the entry scripts) reads it as a
 name, uses it as an attribute or an imported name, or spells it as an exact
 string constant (queries looked up by name). Dunders are exempt. Because
-matching is by bare name, no name may be defined in two package modules."""
+matching is by bare name, no name may be defined in two package modules,
+and a name a non-package file defines at its own top level refers, in that
+file, to its own definition: reading it there is not a use of the package's
+name of the same spelling."""
 
 from __future__ import annotations
 
@@ -41,11 +44,18 @@ def _non_test_files() -> list[Path]:
     return [f for f in files if not _is_test(f.relative_to(ROOT))]
 
 
-def _references(tree: ast.AST) -> set[str]:
+def _references(tree: ast.Module, in_package: bool) -> set[str]:
+    """Names `tree` uses. Outside the package, a bare-name load of one of
+    the file's own top-level definitions is a use of that definition only
+    (a script's `STAGES` list is not the package's `STAGES`)."""
+    own = set() if in_package else {
+        name for node in tree.body for name in _defined_names(node)
+    }
     refs: set[str] = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-            refs.add(node.id)
+            if node.id not in own:
+                refs.add(node.id)
         elif isinstance(node, ast.Attribute):
             refs.add(node.attr)
         elif isinstance(node, ast.alias):
@@ -81,7 +91,8 @@ def _definitions() -> dict[str, list[str]]:
 def test_no_test_only_functions_or_classes():
     refs: set[str] = set()
     for f in _non_test_files():
-        refs |= _references(ast.parse(f.read_text()))
+        in_package = f.relative_to(ROOT).parts[0] == SCANNED
+        refs |= _references(ast.parse(f.read_text()), in_package)
     defs = _definitions()
     unused = {
         name: where
@@ -102,3 +113,18 @@ def test_no_test_only_functions_or_classes():
 def test_allowlist_entries_still_exist():
     stale = set(ALLOWED) - set(_definitions())
     assert not stale, f"allowlisted names no longer defined: {stale}"
+
+
+def test_own_top_level_definition_is_not_a_package_reference():
+    """The scan on synthetic sources: a script that defines and reads its
+    own STAGES does not reference the package's STAGES; a package module
+    reading its own definition, an import and an attribute use do."""
+    script = ast.parse("STAGES = ['a']\nfor s in STAGES:\n    print(s)\n")
+    package = ast.parse("STAGES = []\n\ndef run():\n    return STAGES\n")
+    importer = ast.parse(
+        "from pkg.mod import STAGES\nimport pkg.mod as m\nprint(STAGES, m.run)\n"
+    )
+    assert "STAGES" not in _references(script, in_package=False)
+    assert "print" in _references(script, in_package=False)
+    assert "STAGES" in _references(package, in_package=True)
+    assert {"STAGES", "run"} <= _references(importer, in_package=False)

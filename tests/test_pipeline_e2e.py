@@ -126,13 +126,15 @@ def test_permutation_invariance(spark, cfg, tiny_corpus_dir, tmp_path):
 
 
 def test_design_recall_recorded_in_manifest(spark, cfg, pipeline, tiny_corpus_dir,
-                                            tmp_path):
+                                            tmp_path, monkeypatch):
     """The candidates manifest records the banding's design recall at
     jaccard_min, and its salted worst case whenever a bucket was salted:
     the 1k run salts nothing; a run capped at 2 rows per bucket salts."""
+    from relieff_lsh_spark.operators import candidates
+
+    monkeypatch.setattr(candidates, "BUCKET_CAP", 2)
     capped = DedupPipeline(
-        spark, DedupConfig(bucket_cap=2, shuffle_partitions=cfg.shuffle_partitions),
-        str(tmp_path / "wh"), f"{tiny_corpus_dir}/corpus.parquet",
+        spark, cfg, str(tmp_path / "wh"), f"{tiny_corpus_dir}/corpus.parquet",
     )
     capped.run(resume=False)
     salted = []
@@ -181,3 +183,22 @@ def test_byte_identical_clips_verify_on_their_digests(spark, cfg, tmp_path):
     assert [(r["a"], r["b"], r["channels"]) for r in cand] == [("x1", "x2", ["exact"])]
     counters = metrics["candidates"]["counters"]
     assert counters["salted_buckets"] == 0 and "text_recall_salted" not in counters
+
+
+def test_oracle_judges_quarantined_and_byte_identical_clips():
+    """The brute-force oracle judges the corpus of the test above as the
+    pipeline does: the undecodable `opus` clips get no Hamming edge instead
+    of raising, the byte-identical pair is one component, and the two
+    NULL-bytes clips stay apart."""
+    payload = bytes(range(256)) * 16
+    pdf = pd.DataFrame(
+        {
+            "clip_id": ["x1", "x2", "n1", "n2"],
+            "bytes": [payload, payload, None, None],
+            "codec": ["opus"] * 4,
+            "transcript": ["hello there", "hello there", "good morning", "good night"],
+        }
+    )
+    out = brute_oracle(pdf, DedupConfig())
+    got = dict(zip(out["clip_id"], out["component_id"]))
+    assert got == {"x1": "x1", "x2": "x1", "n1": "n1", "n2": "n2"}

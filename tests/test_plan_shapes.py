@@ -98,7 +98,7 @@ def test_signature_stage_is_one_scan_no_shuffle(spark, tiny_corpus_dir):
     from relieff_lsh_spark.functions.signatures import clip_signatures
 
     corpus = spark.read.parquet(f"{tiny_corpus_dir}/corpus.parquet")
-    sig = clip_signatures(corpus, DedupConfig(shuffle_partitions=8))
+    sig = clip_signatures(corpus)
     plan = _plan(sig)
     assert "Exchange" not in plan
     assert plan.count("Location: InMemoryFileIndex") == 1  # exactly one scan

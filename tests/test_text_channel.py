@@ -6,28 +6,33 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from relieff_lsh_spark.functions.signatures import clip_signatures
-from relieff_lsh_spark.functions.text import band_hashes_expr, make_minhash_udf
+from relieff_lsh_spark.functions.signatures import SHINGLE_K, clip_signatures
+from relieff_lsh_spark.functions.text import (
+    TEXT_BANDS,
+    TEXT_PERMS,
+    band_hashes_expr,
+    make_minhash_udf,
+)
 from relieff_lsh_spark.plans.oracle import jaccard, shingle_set
 
 
-def _sig_df(spark, cfg, texts):
+def _sig_df(spark, texts):
     """clip_signatures over transcript-only rows (NULL bytes/codec: the
     audio channel quarantines them), in input order."""
     df = spark.createDataFrame(
         [(f"c{i:04d}", t, None, None) for i, t in enumerate(texts)],
         "clip_id string, transcript string, bytes binary, codec string",
     )
-    return clip_signatures(df, cfg).orderBy("clip_id")
+    return clip_signatures(df).orderBy("clip_id")
 
 
-def _with_minhash(sigs, cfg):
+def _with_minhash(sigs):
     """The MinHash signature clip_signatures bands (it keeps only the
     bands): the product UDF over the product shingle column."""
-    return sigs.withColumn("minhash", make_minhash_udf(cfg)("shingles"))
+    return sigs.withColumn("minhash", make_minhash_udf()("shingles"))
 
 
-def test_shingle_counts_match_python(spark, cfg):
+def test_shingle_counts_match_python(spark):
     texts = [
         "a b c d e f g",            # 7 tokens -> 3 distinct 5-shingles
         "a a a a a a",              # repeated -> 1 distinct shingle
@@ -35,31 +40,31 @@ def test_shingle_counts_match_python(spark, cfg):
         "",                         # empty -> 0
         "  padded   spacing  here and more words  ",
     ]
-    rows = _sig_df(spark, cfg, texts).select(
+    rows = _sig_df(spark, texts).select(
         F.size("shingles").alias("n_shingles"), "simhash"
     ).collect()
     got = [r["n_shingles"] for r in rows]
-    want = [len(shingle_set(t, cfg.shingle_k)) for t in texts]
+    want = [len(shingle_set(t, SHINGLE_K)) for t in texts]
     assert got == want
     assert all(r["simhash"] is None for r in rows)
 
 
-def test_identical_text_identical_signature(spark, cfg):
+def test_identical_text_identical_signature(spark):
     sigs = _with_minhash(
-        _sig_df(spark, cfg, ["w1 w2 w3 w4 w5 w6 w7 w8"] * 2), cfg
+        _sig_df(spark, ["w1 w2 w3 w4 w5 w6 w7 w8"] * 2)
     ).collect()
     assert sigs[0]["minhash"] == sigs[1]["minhash"]
     assert sigs[0]["text_bands"] == sigs[1]["text_bands"]
 
 
-def test_minhash_estimates_jaccard(spark, cfg):
+def test_minhash_estimates_jaccard(spark):
     """MinHash agreement ~ true Jaccard (within statistical tolerance)."""
     base = [f"w{i}" for i in range(60)]
     variant = list(base)
     variant[30] = "XXX"  # 1 substitution
     t1, t2 = " ".join(base), " ".join(variant)
-    true_j = jaccard(shingle_set(t1, cfg.shingle_k), shingle_set(t2, cfg.shingle_k))
-    rows = _with_minhash(_sig_df(spark, cfg, [t1, t2]), cfg).orderBy("clip_id").collect()
+    true_j = jaccard(shingle_set(t1, SHINGLE_K), shingle_set(t2, SHINGLE_K))
+    rows = _with_minhash(_sig_df(spark, [t1, t2])).orderBy("clip_id").collect()
     m1, m2 = np.array(rows[0]["minhash"]), np.array(rows[1]["minhash"])
     est = float((m1 == m2).mean())
     assert abs(est - true_j) < 0.15
@@ -68,10 +73,10 @@ def test_minhash_estimates_jaccard(spark, cfg):
     assert any(x == y for x, y in zip(b1, b2))
 
 
-def test_unrelated_texts_share_no_band(spark, cfg):
+def test_unrelated_texts_share_no_band(spark):
     rng = np.random.default_rng(0)
     texts = [" ".join(f"t{rng.integers(0, 10_000)}" for _ in range(40)) for _ in range(20)]
-    rows = _sig_df(spark, cfg, texts).collect()
+    rows = _sig_df(spark, texts).collect()
     bands = [r["text_bands"] for r in rows]
     for i in range(len(bands)):
         for j in range(i + 1, len(bands)):
@@ -79,30 +84,29 @@ def test_unrelated_texts_share_no_band(spark, cfg):
             assert shared == 0
 
 
-def test_minimizer_keys_catch_substring(spark, cfg):
+def test_minimizer_keys_catch_substring(spark):
     inner = "alpha beta gamma delta epsilon zeta"
     outer = f"pre1 pre2 pre3 {inner} post1 post2"
-    rows = _sig_df(spark, cfg, [inner, outer]).collect()
+    rows = _sig_df(spark, [inner, outer]).collect()
     k_in, k_out = set(rows[0]["substr_keys"]), set(rows[1]["substr_keys"])
     assert k_in & k_out, "contained transcript must share a minimizer key"
 
 
-def test_minimizer_short_text_still_keyed(spark, cfg):
-    rows = _sig_df(spark, cfg, ["a b c d", "a b c", ""]).select(
+def test_minimizer_short_text_still_keyed(spark):
+    rows = _sig_df(spark, ["a b c d", "a b c", ""]).select(
         F.size("substr_keys").alias("n")
     ).collect()
     # exactly k tokens -> 1 shingle -> 1 key; < k tokens: no shingle, no key
     assert [r["n"] for r in rows] == [1, 0, 0]
 
 
-def test_band_hash_band_index_salted(spark, cfg):
+def test_band_hash_band_index_salted(spark):
     """Identical r-slices in different bands must not collide (band id is
     part of the hash)."""
-    sig = list(range(cfg.n_perms))
     # constant signature -> identical slice contents across all bands
-    df = spark.createDataFrame([([7] * cfg.n_perms,)], ["minhash"])
-    row = df.select(band_hashes_expr(F.col("minhash"), cfg).alias("b")).collect()[0]
-    assert len(set(row["b"])) == cfg.bands
+    df = spark.createDataFrame([([7] * TEXT_PERMS,)], ["minhash"])
+    row = df.select(band_hashes_expr(F.col("minhash")).alias("b")).collect()[0]
+    assert len(set(row["b"])) == TEXT_BANDS
 
 
 def test_text_components_clusters_planted_clones(spark):
@@ -139,7 +143,7 @@ def test_text_components_clusters_planted_clones(spark):
     assert sizes == {c: n for c, n in expect.items() if n >= 2}
 
 
-def test_minhash_arrow_kernel_matches_per_row_formula(cfg):
+def test_minhash_arrow_kernel_matches_per_row_formula():
     """The batched reduceat MinHash kernel must equal the per-row formula
     ((a*h+b) with uint64 wraparound, % M61, min over shingles) on every
     reduceat edge case: leading/mid-batch/trailing empty rows, null rows,
@@ -153,8 +157,8 @@ def test_minhash_arrow_kernel_matches_per_row_formula(cfg):
         minhash_params,
     )
 
-    a, b = minhash_params(cfg)
-    sentinel = [_MERSENNE61 - 1] * cfg.n_perms
+    a, b = minhash_params()
+    sentinel = [_MERSENNE61 - 1] * TEXT_PERMS
 
     def expect_row(row):
         if row is None or len(row) == 0:
@@ -176,7 +180,7 @@ def test_minhash_arrow_kernel_matches_per_row_formula(cfg):
         None,
         [],
     ]
-    kernel = make_minhash_udf(cfg).func
+    kernel = make_minhash_udf().func
     arr = pa.array(rows, type=pa.list_(pa.int64()))
     got = kernel(arr).to_pylist()
     want = [expect_row(r) for r in rows]
