@@ -11,7 +11,8 @@ dedup pipeline runs on a cached deterministically-generated corpus
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir              (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] + shuffle width (default 32)
+  SPARK_GRAFT_CPUS     local[N] + shuffle width (default: the CPUs this
+                       process may run on)
   BENCH_QUERIES        comma list to run a subset (default all)
   BENCH_AUDIO_N        corpus size for the audio e2e (default 4000)
 """
@@ -29,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 AUDIO_N = int(os.environ.get("BENCH_AUDIO_N", "4000"))
 
 HEADLINE = [

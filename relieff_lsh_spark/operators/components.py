@@ -1,12 +1,26 @@
-"""Connected components via alternating large-star/small-star on DataFrames.
+"""Connected components: a partition-local contraction, then
+large-star/small-star rounds on DataFrames.
 
 Replaces the reference's per-key neighbor aggregation (groupByKey + bounded
 neighbor lists, ReliefFFeatureSelector.scala:141-150) with the aggregation a
 dedup pipeline needs: every clip gets the minimum clip_id reachable through
 verified duplicate edges (SURVEY.md §3.3, §7.1 M6).
 
-Algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond" —
-public): alternate
+Contraction (Łącki, Mirrokni and Włodarczyk, "Connected Components at Scale
+via Local Contractions", 2018): one narrow `mapInArrow` pass runs a
+vectorized union-find over each edge partition, in blocks of at most
+CONTRACT_BLOCK edges, and replaces the block by one child -> block-minimum
+edge per non-root vertex. Every output edge joins two vertices of one
+component and every block edge's endpoints stay joined, so the components
+are unchanged; the output is never larger than the input. AQE coalesces a
+dedup-sized edge relation into one partition, where the output already is
+the star forest the rounds below converge to: the fixpoint stops at round
+0, and the stage pays no round's jobs. At scale a vertex seen in several
+partitions or blocks gets several parents, and the star rounds finish the
+job on the contracted graph.
+
+Star rounds (Kiveris et al., "Connected Components in MapReduce and
+Beyond"): alternate
   large-star: every node's larger neighbors re-attach to the minimum of its
               closed neighborhood
   small-star: every node and its smaller neighbors attach to that minimum
@@ -17,35 +31,34 @@ shuffles only the EDGE relation (duplicate pairs), never the full vertex
 set. Vertices untouched by any edge are singletons and join in exactly
 once at the end.
 
-Round-2 scaling note: the round-1 min-label loop shuffled all n vertex
-labels every iteration and was the worst-scaling stage at 4x cores (1.44x);
-this formulation's per-round work is O(|E|), with |E| << n for a dedup
-corpus.
-
 Convergence test: the loop stops as soon as the edge state is a star
 forest — every child has exactly one parent and no parent is a child (one
 grouped aggregate, `_is_star_forest`). Every state edge points from a
-larger to a smaller id and both star rounds preserve connectivity, so a
-star forest is exactly the fixpoint, rooted at component minima: the test
-is exact, costs no extra round to confirm, and an input that is already a
-star forest (e.g. only 2-clip components) converges in 0 rounds.
+larger to a smaller id and both the contraction and the star rounds
+preserve connectivity, so a star forest is exactly the fixpoint, rooted at
+component minima: the test is exact and costs no extra round to confirm.
 
 Lineage/restart discipline: each round the edge state is truncated with
 localCheckpoint; when `checkpoint_dir` is given, every CHECKPOINT_EVERY-th
 round ALSO writes the state to parquet (the reference's persisted-graph
 resume, R:262/336) and a fresh call resumes from the newest valid round —
 on a real cluster localCheckpoint blocks die with their executor, so the
-fixpoint loop needs storage-backed checkpoints to survive restarts. Each
-call runs at most MAX_ROUNDS rounds counted from the round it resumed at,
-so a call that runs out of rounds leaves a checkpoint the next call
+fixpoint loop needs storage-backed checkpoints to survive restarts. A
+resumed state is already contracted and goes straight to the star rounds.
+Each call runs at most MAX_ROUNDS rounds counted from the round it resumed
+at, so a call that runs out of rounds leaves a checkpoint the next call
 continues from.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -89,6 +102,13 @@ MAX_ROUNDS = 25
 # the round counts dedup graphs exhibit — the restart-protection/extra-write
 # trade-off round 2 effectively ran with.
 CHECKPOINT_EVERY = 10
+# Edges one contraction block holds. Memory: the block's ids, their sorted
+# dictionary and a few int64 arrays over its vertices — a few MiB per
+# Python worker however large the partition is. Size: a multiple of the
+# 512-row Arrow batches, and more than the edges of the ~1 MiB partitions
+# AQE coalesces a small edge relation into, so such a partition is one
+# block and contracts to its star forest in one pass.
+CONTRACT_BLOCK = 1 << 16
 
 
 @dataclass
@@ -96,6 +116,61 @@ class ComponentsResult:
     components: DataFrame   # (clip_id, component_id)
     iterations: int
     converged: bool
+
+
+def _min_roots(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Union-find over nodes 0..n-1 (numbered in id order) and edges
+    (a[i], b[i]): root[x] is the smallest node of x's component. Each pass
+    hooks every root that has an edge into another tree onto the smallest
+    such root, then jumps pointers until every node points at its root.
+    Parents only ever point at smaller nodes, so each tree's root is its
+    minimum and no pass can close a cycle."""
+    root = np.arange(n, dtype=np.int64)
+    while True:
+        ra, rb = root[a], root[b]
+        cross = ra != rb
+        if not cross.any():
+            return root
+        ra, rb = ra[cross], rb[cross]
+        np.minimum.at(root, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = root[root]
+            if np.array_equal(jumped, root):
+                break
+            root = jumped
+
+
+def _contract_block(block: pa.Table) -> pa.RecordBatch:
+    """One block of edges (u, v) -> one (child, block-minimum) edge per
+    vertex that is not its block component's minimum. The ids are ranked
+    by Arrow's sort, which orders strings by UTF-8 bytes and integers by
+    value, as Spark's least/greatest do."""
+    ends = pa.chunked_array(block["u"].chunks + block["v"].chunks, block["u"].type)
+    ids = pc.unique(ends)
+    ids = ids.take(pc.sort_indices(ids))
+    node = pc.index_in(ends, value_set=ids).to_numpy()
+    m = block.num_rows
+    root = _min_roots(node[:m], node[m:], len(ids))
+    child = np.flatnonzero(root != np.arange(len(ids)))
+    return pa.RecordBatch.from_arrays(
+        [ids.take(child), ids.take(root[child])], schema=block.schema
+    )
+
+
+def _contract_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body: contract a partition's edges block by block, never
+    holding more than CONTRACT_BLOCK edges plus one incoming batch."""
+    held, n = [], 0
+    for batch in batches:
+        held.append(batch)
+        n += batch.num_rows
+        while n >= CONTRACT_BLOCK:
+            t = pa.Table.from_batches(held)
+            yield _contract_block(t.slice(0, CONTRACT_BLOCK))
+            t = t.slice(CONTRACT_BLOCK)
+            held, n = t.to_batches(), t.num_rows
+    if n:
+        yield _contract_block(pa.Table.from_batches(held))
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -195,13 +270,17 @@ def connected_components(
     if resumed is not None:
         start_round, path = resumed
         e = spark.read.parquet(path)
+    else:
+        # the output keeps the input's schema: pipeline ids are strings,
+        # the docs chain's are int64
+        e = e.mapInArrow(_contract_partition, e.schema)
     # lazy: the entry star-forest test below is the materializing job; an
     # eager checkpoint would run a separate materialization job first — one
     # extra full pass of the edge relation per call
     e = e.localCheckpoint(eager=False)
 
-    # an input that is already a star forest (e.g. every component has two
-    # clips) is the fixpoint: 0 rounds
+    # a contracted single-partition graph is already a star forest, the
+    # fixpoint: 0 rounds
     converged = _is_star_forest(e)
     it = start_round
     last_ckpt = start_round  # rounds-since-checkpoint tracker: the loop

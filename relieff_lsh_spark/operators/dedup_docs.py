@@ -531,7 +531,8 @@ def q_jaccard_verify(docs: DataFrame) -> DataFrame:
 def q_text_components(docs: DataFrame) -> DataFrame:
     """Connected components over the verified near-dup edges: the corpus
     pipeline's final clustering stage (SURVEY.md §3.3 stages 3-4 analog,
-    large-star/small-star on the edge relation) on SQL-replayable text.
+    contraction + large-star/small-star on the edge relation) on
+    SQL-replayable text.
     component_id = min doc_id reachable through jaccard>=0.5 edges;
     singletons keep their own id. The DuckDB oracle replays the fixpoint
     as a recursive reachability CTE — a genuinely different algorithm, so

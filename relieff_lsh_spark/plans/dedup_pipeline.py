@@ -15,7 +15,9 @@ Stage graph (SURVEY.md §3.4):
                  verified    [snapshot]   exact Hamming/Jaccard/substring/bytes
                     │
                     v
-                 components  [snapshot]   large-star/small-star fixpoint
+                 components  [snapshot]   per-partition union-find contraction
+                                          (mapInArrow), then large-star/
+                                          small-star rounds on what is left
 
 Every [snapshot] is a SnapshotCatalog write recording per-partition lineage
 and stage counters; `run(resume=True)` skips any stage whose snapshot

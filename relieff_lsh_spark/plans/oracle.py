@@ -85,8 +85,9 @@ def brute_oracle(corpus_pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
     O(n^2) — small fixtures only, exactly like the reference's brute method.
 
     Judged like the pipeline: a clip with NULL bytes or a codec without a
-    decoder has no SimHash and gets no Hamming edge (quarantine), and
-    clips with equal non-NULL bytes are one component (byte identity).
+    decoder has no SimHash and gets no Hamming edge (quarantine), clips
+    with equal non-NULL bytes are one component (byte identity), and a
+    NULL transcript has no shingle and no verbatim match.
     """
     ids = corpus_pdf["clip_id"].tolist()
     n = len(ids)
@@ -110,8 +111,8 @@ def brute_oracle(corpus_pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
         sims[i] = np.uint64(np.int64(simhash64(spectral_fingerprint(x, sr), planes)))
         has_sim[i] = True
 
-    shingles = [shingle_set(t, SHINGLE_K) for t in corpus_pdf["transcript"]]
-    texts = [t.strip() for t in corpus_pdf["transcript"]]
+    texts = [t.strip() if isinstance(t, str) else "" for t in corpus_pdf["transcript"]]
+    shingles = [shingle_set(t, SHINGLE_K) for t in texts]
 
     # hamming for all pairs, vectorized one row at a time
     for i in range(n):

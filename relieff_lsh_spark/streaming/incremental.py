@@ -53,11 +53,12 @@ refixpoint-over-all-edges):
       when a batch's new edges connect existing labels
 
   Per batch: look up the stored labels of the new edges' endpoints (pruned
-  to their vbucket partitions — O(touched buckets) read), run the star
-  fixpoint on the LABEL graph of just those edges (nodes = touched labels,
-  edges = one per new verified edge — O(batch) work), store new vertices
-  with their resolved root, and append (old_label -> root) merge edges for
-  old labels that changed. components() = comp_vertices JOIN
+  to their vbucket partitions — O(touched buckets) read), run
+  connected_components on the LABEL graph of just those edges (nodes =
+  touched labels, edges = one per new verified edge — O(batch) work; a
+  one-partition label graph contracts to its fixpoint at round 0), store
+  new vertices with their resolved root, and append (old_label -> root)
+  merge edges for old labels that changed. components() = comp_vertices JOIN
   closure(comp_merges): the closure is a fixpoint over the merge log only,
   whose size is the number of cross-batch merge EVENTS since the last
   compaction — compact() FOLDS the log (below), so it never grows with

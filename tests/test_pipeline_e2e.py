@@ -68,6 +68,14 @@ def test_metrics_and_lineage_recorded(pipeline):
     assert pipeline.metrics["components"]["counters"]["converged"]
 
 
+def test_components_converge_at_round_zero(pipeline):
+    """The 1k corpus's verified edges fit one coalesced partition, whose
+    local contraction already is the star forest: the components fixpoint
+    runs no star round."""
+    counters = pipeline.catalog.manifest("components")["counters"]
+    assert counters["converged"] and counters["iterations"] == 0, counters
+
+
 def test_resume_skips_completed_stages(spark, cfg, pipeline, small_corpus_dir):
     pipe2 = DedupPipeline(spark, cfg, WH, f"{small_corpus_dir}/corpus.parquet")
     pipe2.run(resume=True)
@@ -202,3 +210,21 @@ def test_oracle_judges_quarantined_and_byte_identical_clips():
     out = brute_oracle(pdf, DedupConfig())
     got = dict(zip(out["clip_id"], out["component_id"]))
     assert got == {"x1": "x1", "x2": "x1", "n1": "n1", "n2": "n2"}
+
+
+def test_oracle_treats_null_transcript_as_empty_text():
+    """A NULL transcript has no shingle and no verbatim match, as the
+    pipeline's shingling and substring test treat it: the oracle neither
+    raises on it nor joins it to the empty or the repeated transcript."""
+    text = "the quick brown fox jumps over the lazy dog"
+    pdf = pd.DataFrame(
+        {
+            "clip_id": ["t1", "t2", "t3", "t4"],
+            "bytes": [None] * 4,
+            "codec": [None] * 4,
+            "transcript": [text, text, None, ""],
+        }
+    )
+    out = brute_oracle(pdf, DedupConfig())
+    got = dict(zip(out["clip_id"], out["component_id"]))
+    assert got == {"t1": "t1", "t2": "t1", "t3": "t3", "t4": "t4"}
